@@ -129,52 +129,74 @@ object Bench {
   /** Rewrite the committed quiet baseline iff this run qualifies as quiet. */
   private def repin(line: String, freshMedians: Map[String, Double]): Unit = {
     val baselinePath = java.nio.file.Paths.get("bench_full.json")
-    val committed: Map[String, Double] =
-      if (!java.nio.file.Files.exists(baselinePath)) Map.empty
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(baselinePath), "UTF-8")
-        // minimal extraction of the "queries" object: "name":1.234 pairs.
-        // Whitespace-tolerant (r20 fix): the committed pin may have been
-        // written by a pretty-printer ("queries": { ... , "q": 1.2) — the
-        // old no-space pattern matched ZERO queries against such a pin
-        // and the guard accepted vacuously ("1.00x over 0 shared
-        // queries"), which is no guard at all.
-        val obj = """"queries"\s*:\s*\{([^}]*)\}""".r
-          .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-        """"([^"]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(obj)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    val ratios = freshMedians.toSeq.collect {
-      case (name, fresh) if committed.get(name).exists(_ > 0.0) => fresh / committed(name)
-    }.sorted
-    // a committed pin we failed to parse (or share zero queries with)
-    // must REFUSE, not accept vacuously — an unreadable baseline is not
-    // evidence of a quiet host (r20: the old pin's pretty-printed JSON
-    // matched zero queries and the guard waved the rewrite through)
-    if (committed.isEmpty && java.nio.file.Files.exists(baselinePath)) {
-      System.err.println("[bench] --repin REFUSED: committed bench_full.json " +
-        "exists but no query medians could be parsed from it — fix the " +
-        "baseline (or delete it) before re-pinning; fresh run is in " +
-        "bench_last_run.json.")
-      return
-    }
-    val medianRatio = if (ratios.isEmpty) 1.0 else ratios(ratios.length / 2)
-    // SYMMETRIC acceptance band: >1.10x means the host is loaded, but
-    // <0.85x means the fresh run is anomalously fast vs the committed
-    // quiet pin (e.g. a one-off cache alignment) — accepting it would
-    // ratchet the baseline low enough that honest quiet runs get
-    // refused at >1.10x forever after. Both tails leave the pin alone.
-    if (ratios.nonEmpty && (medianRatio > 1.1 || medianRatio < 0.85)) {
-      val why = if (medianRatio > 1.1) "host not quiet" else
-        "anomalously fast vs committed pin (would ratchet the baseline)"
-      System.err.println(f"[bench] --repin REFUSED: median ratio vs committed baseline " +
-        f"$medianRatio%.2fx outside [0.85, 1.10] over ${ratios.length} shared queries — $why " +
-        f"(band p10=${ratios((ratios.length * 0.1).toInt)}%.2f p90=${ratios((ratios.length * 0.9).toInt)}%.2f). " +
-        "bench_full.json left untouched; fresh run is in bench_last_run.json.")
-    } else {
-      java.nio.file.Files.write(baselinePath, line.getBytes("UTF-8"))
-      System.err.println(f"[bench] --repin ACCEPTED (median ratio $medianRatio%.2fx over " +
-        f"${ratios.length} shared queries): bench_full.json rewritten.")
+    val committed =
+      if (!java.nio.file.Files.exists(baselinePath)) None
+      else Some(new String(java.nio.file.Files.readAllBytes(baselinePath), "UTF-8"))
+    repinVerdict(committed, freshMedians) match {
+      case Left(why) =>
+        System.err.println(s"[bench] --repin REFUSED: $why " +
+          "bench_full.json left untouched; fresh run is in bench_last_run.json.")
+      case Right(how) =>
+        java.nio.file.Files.write(baselinePath, line.getBytes("UTF-8"))
+        System.err.println(s"[bench] --repin ACCEPTED ($how): bench_full.json rewritten.")
     }
   }
+
+  /** Query medians of a pin's "queries" object ("name":1.234 pairs).
+    * Whitespace-tolerant (r20 fix): the committed pin may have been
+    * written by a pretty-printer ("queries": { ... , "q": 1.2) — the old
+    * no-space pattern matched ZERO queries against such a pin and the
+    * guard accepted vacuously ("1.00x over 0 shared queries"), which is
+    * no guard at all. */
+  private[graft] def pinnedMedians(pin: String): Map[String, Double] = {
+    val obj = """"queries"\s*:\s*\{([^}]*)\}""".r
+      .findFirstMatchIn(pin).map(_.group(1)).getOrElse("")
+    """"([^"]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(obj)
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+  }
+
+  /** The re-pin guard: Right(summary) when a fresh run with these
+    * per-query medians may replace the committed pin, Left(reason) when
+    * it must not. `committedPin` is the committed file's text, None when
+    * no pin is committed yet (the first pin is always accepted). */
+  private[graft] def repinVerdict(committedPin: Option[String],
+      freshMedians: Map[String, Double]): Either[String, String] =
+    committedPin.map(pinnedMedians) match {
+      case None => Right("no committed baseline")
+      case Some(committed) =>
+        val ratios = freshMedians.toSeq.collect {
+          case (name, fresh) if committed.get(name).exists(_ > 0.0) =>
+            fresh / committed(name)
+        }.sorted
+        // a committed pin we failed to parse, or that shares no query
+        // with the fresh run, must REFUSE, not accept vacuously — it is
+        // no evidence of a quiet host (r20: the old pin's pretty-printed
+        // JSON matched zero queries and the guard waved the rewrite
+        // through)
+        if (committed.isEmpty)
+          Left("committed bench_full.json exists but no query medians could " +
+            "be parsed from it — fix the baseline (or delete it) before re-pinning;")
+        else if (ratios.isEmpty)
+          Left("committed bench_full.json shares no query (with a positive " +
+            "median) with the fresh run, so no ratio can show the host is " +
+            "quiet — fix the baseline (or delete it) before re-pinning;")
+        else {
+          val medianRatio = ratios(ratios.length / 2)
+          // SYMMETRIC acceptance band: >1.10x means the host is loaded,
+          // but <0.85x means the fresh run is anomalously fast vs the
+          // committed quiet pin (e.g. a one-off cache alignment) —
+          // accepting it would ratchet the baseline low enough that
+          // honest quiet runs get refused at >1.10x forever after. Both
+          // tails leave the pin alone.
+          if (medianRatio > 1.1 || medianRatio < 0.85) {
+            val why = if (medianRatio > 1.1) "host not quiet" else
+              "anomalously fast vs committed pin (would ratchet the baseline)"
+            Left(f"median ratio vs committed baseline $medianRatio%.2fx outside " +
+              f"[0.85, 1.10] over ${ratios.length} shared queries — $why " +
+              f"(band p10=${ratios((ratios.length * 0.1).toInt)}%.2f " +
+              f"p90=${ratios((ratios.length * 0.9).toInt)}%.2f).")
+          } else
+            Right(f"median ratio $medianRatio%.2fx over ${ratios.length} shared queries")
+        }
+    }
 }

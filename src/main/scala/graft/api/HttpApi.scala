@@ -34,8 +34,29 @@ import graft.streaming.{FilterManager, RateLimiter}
   * every request passes the [[RateLimiter.EdgeRateLimiter]] before its
   * handler runs; denials are 429 with X-RateLimit-Limit / -Remaining /
   * -Reset and Retry-After.
+  *
+  * Sockets run with TCP_NODELAY. The JDK server writes a response's
+  * headers and body as two segments; with Nagle's algorithm on, the body
+  * waits for the client's delayed ACK of the headers, about 40 ms on
+  * Linux, on every keep-alive response. The JDK reads its switch, the
+  * system property `sun.net.httpserver.nodelay`, once, when its
+  * `ServerConfig` class first initialises (at the first
+  * `HttpServer.create` in the JVM). This object therefore sets it to
+  * `true`, unless the process already set it, before it creates any
+  * server; [[loopbackServer]] is the one place servers are created, and
+  * other code that binds a JDK server in the same JVM should go through
+  * it so the switch is in place whichever server comes first.
   */
 object HttpApi {
+
+  private val NoDelayProperty = "sun.net.httpserver.nodelay"
+  if (System.getProperty(NoDelayProperty) == null)
+    System.setProperty(NoDelayProperty, "true")
+
+  /** An unstarted JDK server on 127.0.0.1 (`port` 0 picks an ephemeral
+    * port), created after this object has set the no-delay switch. */
+  private[graft] def loopbackServer(port: Int): HttpServer =
+    HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", port), 0)
 
   /** Process-default JWT secret for dev/test binds; production callers
     * pass their own. */
@@ -64,8 +85,7 @@ object HttpApi {
         new java.util.concurrent.atomic.AtomicReference(Seq.empty),
       ws: Option[graft.streaming.WsServer.Server] = None)
       : HttpServer = {
-    val server = HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", port), 0)
+    val server = loopbackServer(port)
     val limiter =
       if (rateRules.isEmpty) None
       else Some(new RateLimiter.EdgeRateLimiter(rateRules, clock))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The flagship GET /api/monitor/jobs pipeline: param-compiled filters →
-  * sort → limit → derived projection → JSON rows
+  * derived projection → sort → limit → JSON rows
   * (reference: src/request_handler.cpp:1172-1318).
   *
   * The param compiler turns REST query parameters into one declarative
@@ -62,11 +62,20 @@ object JobQueries {
 
   /** Full flagship pipeline to the reference's JSON row shape
     * (reference: src/request_handler.cpp:1292-1315). Timestamps formatted
-    * `%Y-%m-%d %H:%M:%S` UTC (reference: src/request_handler.cpp:1455-1466). */
+    * `%Y-%m-%d %H:%M:%S` UTC (reference: src/request_handler.cpp:1455-1466).
+    *
+    * The derived columns sit BELOW the sort so that only the JSON
+    * projection is above the limit: the planner then sees
+    * `Limit(Project(Sort))` and emits one shuffle-free
+    * `TakeOrderedAndProject` job. Deriving after the limit leaves two
+    * projections that cannot collapse (`executionTimeMs` is referenced
+    * three times), which plans as a range-partitioned global sort plus
+    * `CollectLimit` — three jobs for at most 1,000 rows. The filters
+    * still push below the derived projection to the scan. */
   def monitorJobsJson(jobs: DataFrame, p: JobListParams,
       now: Column = current_timestamp()): DataFrame = {
     val ts = (c: Column) => date_format(c, "yyyy-MM-dd HH:mm:ss")
-    derived(jobList(jobs, p), now)
+    jobList(derived(jobs, now), p)
       .select(to_json(struct(
         col("jobId"),
         col("jobType").as("type"),

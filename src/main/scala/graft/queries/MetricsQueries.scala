@@ -132,7 +132,9 @@ object MetricsQueries {
         from = Some(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")),
         to = Some(java.sql.Timestamp.valueOf("1999-12-31 00:00:00")),
         limit = 200)
-      JobQueries.derived(JobQueries.jobList(jobs, p))
+      // derive before the top-N so it plans as TakeOrderedAndProject
+      // (see JobQueries.monitorJobsJson)
+      JobQueries.jobList(JobQueries.derived(jobs), p)
         .select(col("jobId"), col("status"),
           date_format(col("createdAt"), "yyyy-MM-dd HH:mm:ss").as("created_at"),
           col("recordsProcessed"), col("executionTimeMs"), col("processingRate"))

@@ -136,6 +136,34 @@ class ApiSpec extends AnyFunSuite {
     } finally graft.api.HttpApi.stop(server)
   }
 
+  test("HTTP wire: keep-alive responses do not stall on a delayed ACK") {
+    // The JDK server sends headers and body as two segments; with Nagle on,
+    // the body waits ~40 ms for the client's delayed ACK. HttpApi turns
+    // TCP_NODELAY on before the first JDK server of the JVM is created —
+    // every server in this suite run, StreamingSpec's sinks included,
+    // goes through HttpApi.loopbackServer, so suite order cannot matter.
+    import spark.implicits._
+    val logs = Seq(graft.model.LogMessage(
+      "j1", "INFO", "db", "ok", ts("2025-09-01 10:00:00"))).toDF()
+    val server = graft.api.HttpApi.start(0, spark, jobs, logs, rateRules = Nil)
+    val http = java.net.http.HttpClient.newBuilder()
+      .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+      s"http://127.0.0.1:${server.getAddress.getPort}/api/monitor/status")).GET().build()
+    def timedGet(): Double = {
+      val t0 = System.nanoTime()
+      val r = http.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode == 200 && r.body.contains("\"server_status\""), r.body)
+      (System.nanoTime() - t0) / 1e6
+    }
+    try {
+      (1 to 5).foreach(_ => timedGet()) // connection set-up and warm-up
+      val ms = (1 to 30).map(_ => timedGet()).sorted
+      val p50 = ms(14) // nearest rank: ceil(0.5 * 30) = 15th
+      assert(p50 < 20.0, f"p50 $p50%.1f ms over 30 keep-alive GETs: ${ms.mkString(",")}")
+    } finally graft.api.HttpApi.stop(server)
+  }
+
   test("PerfMonitor: percentile matches the reference's index formula") {
     val pm = new graft.api.PerfMonitor()
     // durations 1..100 → sorted; reference index = p*(n-1):

@@ -120,16 +120,40 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("q03/q98: top-N plans as TakeOrderedAndProject, never a global sort") {
-    Seq("q03_top_recent", "q98_key_skew").foreach { name =>
-      val ex = executed(query(name))
+  test("q03/q98/q23 + monitorJobs: top-N as TakeOrderedAndProject, never a global sort") {
+    val q98 = executed(query("q98_key_skew"))
+    assert(q98.contains("TakeOrderedAndProject"),
+      s"q98: top-N lost TakeOrderedAndProject:\n$q98")
+    // the monitor-jobs pipeline, as q23 and as the REST route over a
+    // jobs frame mapped from the orders scan: derived columns above the
+    // limit would leave Limit(Project(Project(Sort))), which plans as a
+    // range-partitioned global sort + CollectLimit (three jobs)
+    import org.apache.spark.sql.functions._
+    val jobs = graft.core.Tables(spark, dir).orders.select(
+      concat(lit("job_"), col("o_orderkey")).as("jobId"),
+      lit("EXTRACT").as("jobType"),
+      when(col("o_orderstatus") === "F", "COMPLETED").otherwise("FAILED").as("status"),
+      col("o_orderdate").cast("timestamp").as("createdAt"),
+      col("o_orderdate").cast("timestamp").as("startedAt"),
+      (col("o_orderdate").cast("timestamp") + expr("INTERVAL 5 MINUTES")).as("completedAt"),
+      lit(null).cast("string").as("errorMessage"),
+      col("o_orderkey").as("recordsProcessed"),
+      col("o_orderkey").as("recordsSuccessful"),
+      lit(0L).as("recordsFailed"))
+    val monitorJobs = graft.api.QueryApi.monitorJobs(jobs,
+      "status=COMPLETED&from=1995-01-01T00:00:00&limit=50")
+      .getOrElse(fail("monitorJobs rejected valid params"))
+    Seq(
+      "q03_top_recent" -> query("q03_top_recent"),
+      "q23_monitor_jobs" -> query("q23_monitor_jobs"),
+      "QueryApi.monitorJobs" -> monitorJobs).foreach { case (name, df) =>
+      val ex = executed(df)
       assert(ex.contains("TakeOrderedAndProject"),
         s"$name: top-N lost TakeOrderedAndProject:\n$ex")
+      // no full global sort for a bounded top-N
+      assert(!ex.contains("Exchange rangepartitioning"),
+        s"$name: global sort snuck in:\n$ex")
     }
-    // q03 must not pay a full global sort for its 100 rows
-    val q03 = executed(query("q03_top_recent"))
-    assert(!q03.contains("Exchange rangepartitioning"),
-      s"q03: global sort snuck in:\n$q03")
   }
 
   test("q82/q92: shuffle-exchange budget holds, funnel keys on ONE column") {

@@ -500,8 +500,7 @@ class StreamingSpec extends AnyFunSuite {
     val hookFails = new java.util.concurrent.atomic.AtomicInteger(1)
     val slackBodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val slackBadAck = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.api.HttpApi.loopbackServer(0)
     def respond(ex: com.sun.net.httpserver.HttpExchange, code: Int,
         body: String): Unit = {
       val bytes = body.getBytes("UTF-8")
@@ -663,8 +662,7 @@ class StreamingSpec extends AnyFunSuite {
     // /flaky 503s the first two requests then accepts; /dead always 503s
     val received = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val flakyFails = new java.util.concurrent.atomic.AtomicInteger(2)
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.api.HttpApi.loopbackServer(0)
     server.createContext("/flaky", (ex: com.sun.net.httpserver.HttpExchange) => {
       val body = scala.io.Source.fromInputStream(ex.getRequestBody, "UTF-8").mkString
       if (flakyFails.getAndDecrement() > 0) ex.sendResponseHeaders(503, -1)
@@ -728,8 +726,7 @@ class StreamingSpec extends AnyFunSuite {
     val esBodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val esRejectFirst = new java.util.concurrent.atomic.AtomicBoolean(true)
     val hecBodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.api.HttpApi.loopbackServer(0)
     def respond(ex: com.sun.net.httpserver.HttpExchange, code: Int, body: String): Unit = {
       val bytes = body.getBytes("UTF-8")
       ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
@@ -834,8 +831,7 @@ class StreamingSpec extends AnyFunSuite {
     LogShipper.resetStats()
     val goodSecret = "test-secret-key"
     val bodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.api.HttpApi.loopbackServer(0)
     server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
       val body = scala.io.Source.fromInputStream(ex.getRequestBody, "UTF-8").mkString
       val h = ex.getRequestHeaders
@@ -901,8 +897,7 @@ class StreamingSpec extends AnyFunSuite {
     val calls = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val rejected = new java.util.concurrent.atomic.AtomicInteger(0)
     val tsRe = """"timestamp":(\d+)""".r
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.api.HttpApi.loopbackServer(0)
     server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
       val body = scala.io.Source.fromInputStream(ex.getRequestBody, "UTF-8").mkString
       val stamps = tsRe.findAllMatchIn(body).map(_.group(1).toLong).toVector
@@ -999,8 +994,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     LogShipper.resetStats()
     val phase = new java.util.concurrent.atomic.AtomicInteger(0)
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.api.HttpApi.loopbackServer(0)
     def respond(ex: com.sun.net.httpserver.HttpExchange, body: String): Unit = {
       val bytes = body.getBytes("UTF-8")
       ex.sendResponseHeaders(200, bytes.length)
