@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * SPATIALLY-adjacent luma cells): same one-pass native kernel shape,
   * same ARRAY<INT> input contract, different adjacency geometry —
   * audio similarity lives in how band energy MOVES, not where it sits.
-  * [[AudioFingerprint.bandFingerprintDeclarative]] is the pure-builtin
+  * `AudioFingerprintWitness.bandFingerprintDeclarative` is the pure-builtin
   * parity witness the oracle SQL mirrors. Near-dup CANDIDATES then
   * come from Hamming-band bucketing
   * ([[graft.operators.Dedup.hammingNearDupPairs]] — the q204 machinery
@@ -91,27 +91,6 @@ object AudioFingerprint {
     * energy matrix — the native kernel. */
   def bandFingerprint(energies: Column, frames: Int, bands: Int): Column =
     Bridge.column(AudioFingerprintExpr(Bridge.expression(energies), frames, bands))
-
-  /** Pure-builtin fingerprint (unrolled adjacent-window comparisons) —
-    * parity witness for the kernel and the formulation the oracle SQL
-    * mirrors, on VALID matrices only: a null or missing cell reads as
-    * an unset bit here (null `>` is false), where the kernel refuses
-    * loudly. The kernel — not this witness — owns the bad-input
-    * stance (the [[ImageHash.dHashGridDeclarative]] convention);
-    * production paths must go through the kernel. */
-  def bandFingerprintDeclarative(energies: Column, frames: Int,
-      bands: Int): Column = {
-    require(frames >= 2 && bands >= 1 && (frames - 1) * bands <= 64,
-      s"audio fingerprint ${frames}x$bands must fit 64 bits")
-    // disjoint power-of-two terms never carry, so the sum is the OR of
-    // the bit pattern even when bit 63 participates
-    (0 until (frames - 1) * bands).map { k =>
-      // position k compares window t = k/bands with t+1 in band k%bands;
-      // element_at is 1-based
-      when(element_at(energies, k + bands + 1) > element_at(energies, k + 1),
-        lit(1L << k)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
 
   /** JVM twin of the kernel for driver-side witnesses and the
     * partition-batched real-codec path. */

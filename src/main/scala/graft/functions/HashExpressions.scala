@@ -237,7 +237,7 @@ case class SimHash16Expr(child: Expression)
 
 /** 64-bit SimHash over a token array: one xxhash64 (seed 42 — Spark's
   * `xxhash64` default) per token, 64 vote counters — identical math to
-  * the declarative formulation in Dedup.simhash64Declarative, which
+  * the declarative formulation in DedupWitness.simhash64Declarative, which
   * re-tests the SAME precomputed hash per bit but still walks the array
   * through 64 interpreted higher-order filter passes. */
 case class SimHash64Expr(child: Expression)

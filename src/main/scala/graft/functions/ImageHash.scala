@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * (8×4 grid → 28 bits) oracles in DuckDB while the real ImageIO path
   * uses the full 9×8 → 64-bit form.
   *
-  * One-pass native kernel; [[ImageHash.dHashGridDeclarative]] is the
+  * One-pass native kernel; `ImageHashWitness.dHashGridDeclarative` is the
   * pure-builtin parity witness the oracle SQL mirrors. Near-dup
   * CANDIDATES then come from Hamming-band bucketing
   * ([[graft.operators.Dedup.hammingNearDupPairs]]) — never an
@@ -88,22 +88,6 @@ object ImageHash {
   /** dHash of a row-major (gw+1)×gh luma grid — the native kernel. */
   def dHashGrid(grid: Column, gw: Int, gh: Int): Column =
     Bridge.column(DHashGridExpr(Bridge.expression(grid), gw, gh))
-
-  /** Pure-builtin dHash (unrolled adjacent-cell comparisons) — parity
-    * witness for the kernel and the formulation the oracle mirrors. */
-  def dHashGridDeclarative(grid: Column, gw: Int, gh: Int): Column = {
-    require(gw >= 1 && gh >= 1 && gw * gh <= 64,
-      s"dhash grid ${gw}x$gh must fit 64 bits")
-    // disjoint power-of-two terms never carry, so the sum is the OR of
-    // the bit pattern even when bit 63 (Long.MinValue) participates
-    (0 until gw * gh).map { b =>
-      val y = b / gw
-      val x = b % gw
-      val p = y * (gw + 1) + x // 0-based; element_at is 1-based
-      when(element_at(grid, p + 2) > element_at(grid, p + 1),
-        lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
 
   /** JVM twin of the kernel for driver-side witnesses and the
     * partition-batched real-codec path. */

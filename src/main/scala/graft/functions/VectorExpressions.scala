@@ -351,7 +351,7 @@ case class SqDistExpr(left: Expression, right: Expression)
 /** One-pass int8 quantization kernel: max-abs fold + code emission in a
   * single traversal, returned as struct<codes: array<int>, scale: double>
   * so the 4×-smaller representation and its dequant factor travel
-  * together. Value-identical to [[graft.operators.Embeddings.quantizeInt8Declarative]]
+  * together. Value-identical to `graft.operators.EmbeddingsWitness.quantizeInt8Declarative`
   * (same fold, same explicit floor(x/scale + 0.5) half-up formula —
   * pinned by the q91 oracle and a PropertySpec parity case). At 100 TB
   * this is the storage lever: an embedding column drops from 4 B to 1 B
@@ -381,7 +381,7 @@ case class QuantizeInt8Expr(child: Expression)
   * vector once per plane through interpreted `aggregate(zip_with(...))`
   * lambdas (planes × dims multiplies, planes traversals); this kernel
   * does all planes in one traversal against the baked-in sign matrix.
-  * Value-identical to [[graft.operators.Similarity.lshBucketDeclarative]]
+  * Value-identical to `graft.operators.SimilarityWitness.lshBucketDeclarative`
   * (parity spec'd — same fold order and promotion per plane). */
 case class LshBucketExpr(child: Expression, matrix: Array[Array[Double]])
     extends UnaryExpression {

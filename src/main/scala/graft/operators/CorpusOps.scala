@@ -333,8 +333,9 @@ object CorpusOps {
     *
     * One-pass per-document kernel ([[graft.functions.RepetitionStatsExpr]]):
     * tokenize + distinct + gram counts in a single traversal, no explode,
-    * no shuffle, no second scan. [[repetitionSignalsDeclarative]] keeps
-    * the explode→count→max formulation as the parity witness (measured
+    * no shuffle, no second scan. The test-scope
+    * `CorpusOpsWitness.repetitionSignalsDeclarative` keeps the
+    * explode→count→max formulation as the parity witness (measured
     * 12.4 s → sub-second at sf0.1). */
   def repetitionSignals(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
@@ -350,31 +351,6 @@ object CorpusOps {
         when(col("_rs.n_grams") > 0,
           col("_rs.top_n").cast("double") / col("_rs.n_grams").cast("double"))
           .otherwise(0.0).as("top2gram_frac"))
-
-  /** Explode-based formulation — parity witness for [[repetitionSignals]]
-    * (linear with map-side combine, but two corpus scans + a (doc, gram)
-    * shuffle the kernel avoids). */
-  def repetitionSignalsDeclarative(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val ts = TextFunctions.tokens(col(textCol))
-    val grams = TextFunctions.wordShingles(col(textCol), 2)
-    val base = docs.select(col(idCol).as("doc_id"),
-      size(ts).as("n_tokens"),
-      size(array_distinct(ts)).as("n_distinct"),
-      size(grams).as("n_grams"))
-    val top = docs.select(col(idCol).as("doc_id"),
-      explode(grams).as("g"))
-      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("n"))
-      .groupBy(col("doc_id")).agg(max(col("n")).as("top_n"))
-    base.join(top, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"), col("n_distinct"),
-        when(col("n_tokens") > 0,
-          lit(1.0) - col("n_distinct").cast("double") / col("n_tokens").cast("double"))
-          .otherwise(0.0).as("rep_ratio"),
-        when(col("n_grams") > 0,
-          col("top_n").cast("double") / col("n_grams").cast("double"))
-          .otherwise(0.0).as("top2gram_frac"))
-  }
 
   /** Banded redundancy histogram — the SQL-expressible companion of the
     * deflate compression signal ([[graft.functions.CompressionRatioExpr]],
@@ -797,9 +773,9 @@ object CorpusOps {
     // each consume it, and without the cache the tokenize + n-slice-zip
     // + one-md5-per-position pass (the operator's dominant cost) runs
     // twice per execution. Narrow (doc_id, pos, fp) rows — the same
-    // corpus-sized-cache trade as similarityJoin's shingle table;
-    // released by the ContextCleaner once the returned plan is
-    // unreachable (the q30 contract).
+    // corpus-sized-cache trade as similarityJoin's shingle table. The
+    // entry outlives this call (the ContextCleaner never drops a
+    // persisted Dataset) and stays until the caller's `clearCache`.
     val grams = spanGrams(toks, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val firsts = grams.groupBy(col("fp"))
@@ -1713,8 +1689,8 @@ object CorpusOps {
     // without this the corpus would be scanned twice (once for total,
     // once when the caller collects), breaking the one-pass claim.
     // Unpersisting here would reintroduce exactly that rescan, so the
-    // (tiny) entry is left to the ContextCleaner once the returned plan
-    // is unreachable; a tight tuning loop can clearCache() between runs
+    // (tiny) entry outlives this call and stays until the caller's
+    // `clearCache` (the ContextCleaner never drops a persisted Dataset)
     val ffCounts = docs.select(firstFail.as("ff"))
       .groupBy(col("ff")).agg(count(lit(1)).as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

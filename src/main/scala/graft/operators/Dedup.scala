@@ -179,16 +179,9 @@ object Dedup {
   }
 
   /** Exact Jaccard over distinct-shingle arrays — one-pass native kernel
-    * ([[jaccardDeclarative]] is the parity witness). */
+    * (`DedupWitness.jaccardDeclarative` is the parity witness). */
   def jaccard(a: Column, b: Column): Column =
     graft.functions.ShingleExpressions.jaccard(a, b)
-
-  /** Pure-builtin Jaccard (array_intersect + array_distinct(concat)). */
-  def jaccardDeclarative(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val union = size(array_distinct(concat(a, b))).cast("double")
-    when(union > 0, inter / union).otherwise(0.0)
-  }
 
   /** EXACT-threshold Jaccard similarity join via prefix filtering (the
     * AllPairs/SSJoin family — Bayardo et al. 2007, Chaudhuri et al.
@@ -299,8 +292,9 @@ object Dedup {
     * The per-doc shingle/signature table is persisted (MEMORY_AND_DISK):
     * it is O(corpus) — the right thing to cache even at 100 TB scale,
     * where the alternative is recomputing the signature expression for
-    * every one of O(candidate-pairs) rows. Spark's ContextCleaner
-    * releases the cache when the plan is garbage-collected. */
+    * every one of O(candidate-pairs) rows. The cache entry outlives
+    * the call — the ContextCleaner never drops a persisted Dataset —
+    * so it stays until the caller's `clearCache`. */
   def minhashNearDupPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", shingleSize: Int = 3, numHashes: Int = 12,
       rowsPerBand: Int = 3, threshold: Double = 0.5,
@@ -354,24 +348,11 @@ object Dedup {
   /** 64-bit SimHash via xxhash64 — the production variant (Spark-only;
     * xxhash64 has no DuckDB equivalent so the oracle uses simhash16).
     * Computed by the one-pass native kernel: one xxhash64 per token, 64
-    * vote counters, one traversal. [[simhash64Declarative]] keeps the
+    * vote counters, one traversal. `DedupWitness.simhash64Declarative` keeps the
     * pure-builtin formulation as the parity witness (OperatorSpec asserts
     * kernel == declarative on real documents). */
   def simhash64(textCol: Column): Column =
     graft.functions.HashExpressions.simhash64(array_distinct(tokens(textCol)))
-
-  /** Pure-builtin 64-bit SimHash (64 interpreted filter passes over the
-    * per-token hash array) — parity witness for the native kernel. */
-  def simhash64Declarative(textCol: Column): Column = {
-    val hashes = transform(array_distinct(tokens(textCol)), t => xxhash64(t))
-    val nToks = size(hashes)
-    val bits = (0 until 64).map { i =>
-      val ones = size(filter(hashes, h => pmod(shiftrightunsigned(h, i), lit(2)) === 1))
-      val votes = ones * 2 - nToks
-      when(votes > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
 
   /** Hamming-distance near-dup pairs over a fingerprint column (image
     * dHash, SimHash — any ≤63-bit perceptual hash) via BAND bucketing:
@@ -507,7 +488,7 @@ object Dedup {
       bits: Int, bands: Int, maxDist: Int,
       idCol: String = "id", hashCol: String = "hash"): DataFrame =
     hammingAdmissionFold(batch, bits, bands, maxDist, idCol, hashCol,
-      load = s => graft.sources.DHashStore.loadExcluding(s, dir, batchId),
+      load = s => graft.sources.DHashStore.load(s, dir, Some(batchId)),
       append = graft.sources.DHashStore.appendDelta(_, dir, batchId))
 
   /** [[imageAdmissionIngest]] for AUDIO band fingerprints over
@@ -517,7 +498,7 @@ object Dedup {
       bits: Int, bands: Int, maxDist: Int,
       idCol: String = "id", hashCol: String = "hash"): DataFrame =
     hammingAdmissionFold(batch, bits, bands, maxDist, idCol, hashCol,
-      load = s => graft.sources.AudioHashStore.loadExcluding(s, dir, batchId),
+      load = s => graft.sources.AudioHashStore.load(s, dir, Some(batchId)),
       append = graft.sources.AudioHashStore.appendDelta(_, dir, batchId))
 
   /** The shared Hamming admission fold: a batch row is admitted iff it
@@ -781,7 +762,7 @@ object Dedup {
     // a set too (the store's dedupe collapses across deltas, not
     // within-write duplicates a caller could otherwise inflate)
     val b = batchPostings.select(col("id"), col("fhash")).distinct()
-    val store = graft.sources.FrameHashStore.loadExcluding(spark, dir, batchId)
+    val store = graft.sources.FrameHashStore.load(spark, dir, Some(batchId))
     val hitStore = incrementalFrameSetPairs(b, store, tMilli)
       .select(col("new_id").as("id")).distinct()
     val within = frameSetNearDupPairs(b, tMilli)
@@ -929,9 +910,9 @@ object Dedup {
     // materialization (spilling to disk past memory) beats recomputing
     // the md5 over the full batch, which is the dominant per-row cost
     // this routing exists to bound. Cache lifecycle: the handle is
-    // internal, so the entry is released by Spark's ContextCleaner when
-    // the returned plan is garbage-collected; a tight run-over-run loop
-    // that outpaces GC should spark.catalog.clearCache() between runs
+    // internal and the entry outlives this call (the ContextCleaner
+    // never drops a persisted Dataset), so a run-over-run caller must
+    // spark.catalog.clearCache() between runs to release it
     val routed = newDocs.withColumn("fp", storeFingerprint(col(textCol)))
       .withColumn("maybe_dup", mightContain(col("fp")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1044,9 +1025,9 @@ object Dedup {
     // newPairs is typically the tail of an expensive LSH+verify
     // pipeline and is referenced three times below (endpoints, the CC
     // edge set, and through the untouched-side anti-join) — persist it
-    // so the pipeline runs once (released by the ContextCleaner once
-    // the returned plan is unreachable, same contract as
-    // [[admitNearDupFree]]'s batch table)
+    // so the pipeline runs once. The entry outlives this call, as
+    // [[admitNearDupFree]]'s batch table does: it stays until the
+    // caller's `clearCache`
     val np = newPairs.select(col(aCol), col(bCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val endpoints = np.select(col(aCol).as(idCol))
@@ -1410,9 +1391,9 @@ object Dedup {
     * doc. Composes [[incrementalNearDupPairs]] (vs the store) with the
     * within-batch pipeline ([[lshCandidatePairs]] → [[jaccard]] →
     * [[dropNearDuplicates]]); the batch's minhashed table is computed
-    * once and persisted for both uses (released by the ContextCleaner
-    * once the returned plan is unreachable — clearCache() between runs
-    * if a tight ingestion loop outpaces GC). Append [[minhashed]] rows
+    * once and persisted for both uses; that cache entry outlives the
+    * call, so an ingestion loop must clearCache() between runs to
+    * release it. Append [[minhashed]] rows
     * of the admitted docs to the store for the next run. */
   def admitNearDupFree(newDocs: DataFrame, storeMh: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
@@ -1463,14 +1444,4 @@ object Dedup {
       .agg(count(lit(1)).as("shared_fps"))
       .filter(col("shared_fps") >= minShared)
   }
-
-  /** SimHash near-dup buckets: docs sharing a fingerprint are duplicate
-    * candidates; hamming-distance-k search joins on fingerprints with k
-    * bits masked out (k small). */
-  def simhashClusters(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).as("id"), simhash16(col(textCol)).as("simhash"))
-      .groupBy(col("simhash"))
-      .agg(min(col("id")).as("canonical_id"), count(lit(1)).as("n_docs"),
-        sort_array(collect_list(col("id"))).as("ids"))
 }

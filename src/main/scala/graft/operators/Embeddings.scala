@@ -23,40 +23,18 @@ object Embeddings {
       lit(0.0), (acc, v) => acc + v))
 
   /** Unit-normalize to array<double>; the zero vector maps to zeros.
-    * One-pass native kernel ([[normalizeDeclarative]] is the parity
-    * witness — the HOF pair walks the array three times through the
-    * interpreter). */
+    * One-pass native kernel (`EmbeddingsWitness.normalizeDeclarative`
+    * is the parity witness — the HOF pair walks the array three times
+    * through the interpreter). */
   def normalize(vec: Column): Column =
     graft.functions.VectorExpressions.normalize(vec)
 
-  /** Pure-HOF formulation — parity witness for [[normalize]]. */
-  def normalizeDeclarative(vec: Column): Column = {
-    val n = l2Norm(vec)
-    when(n > 0, transform(vec, x => x.cast("double") / n))
-      .otherwise(transform(vec, _ => lit(0.0)))
-  }
-
   /** Symmetric int8 quantization as struct<codes, scale> — the 4×
     * storage lever for embedding columns at corpus scale. One-pass
-    * native kernel; [[quantizeInt8Declarative]] is the parity witness. */
+    * native kernel; `EmbeddingsWitness.quantizeInt8Declarative` is the
+    * parity witness. */
   def quantizeInt8(vec: Column): Column =
     graft.functions.VectorExpressions.quantizeInt8(vec)
-
-  /** Pure-HOF formulation — parity witness for [[quantizeInt8]]. The
-    * explicit floor(x/scale + 0.5) half-up formula (never an engine
-    * round()) and greatest-skips-null max fold define the contract.
-    * A NULL input vector yields a NULL struct (matching the kernel's
-    * null-safe eval), not struct(NULL, 0.0). */
-  def quantizeInt8Declarative(vec: Column): Column = {
-    val maxabs = aggregate(transform(vec, x => abs(x.cast("double"))),
-      lit(0.0), (acc, v) => greatest(acc, v))
-    val scale = when(maxabs > 0, maxabs / lit(127.0)).otherwise(lit(0.0))
-    val codes = transform(vec, x =>
-      when(x.isNull, lit(null).cast("int"))
-        .when(scale > 0, floor(x.cast("double") / scale + lit(0.5)).cast("int"))
-        .otherwise(lit(0)))
-    when(vec.isNotNull, struct(codes.as("codes"), scale.as("scale")))
-  }
 
   /** The storage form of [[quantizeInt8]]: codes narrowed to
     * array<tinyint> (every code fits [-127, 127]) plus the per-vector
@@ -125,7 +103,7 @@ object Embeddings {
     * shuffle partition (spills — a million-chunk group costs disk, not
     * heap), then a streaming run-fold with O(1) state per group. No
     * per-cell array is ever materialized, unlike the
-    * [[meanPoolDeclarative]] parity witness, whose
+    * `EmbeddingsWitness.meanPoolDeclarative` parity witness, whose
     * `array_sort(collect_list(...))` buffers a whole group per
     * aggregation cell and is kept only to pin these semantics in specs. */
   def meanPool(df: DataFrame, groupCol: Column, idCol: String = "vec_id",
@@ -170,26 +148,5 @@ object Embeddings {
         }
       }
     }(Encoders.row(outSchema))
-  }
-
-  /** The declarative formulation of [[meanPool]]: same ordered-fold
-    * semantics via `array_sort(collect_list(struct(id, v)))` per cell.
-    * Materializes each group in one aggregation buffer — fine at test
-    * scale, a heap risk for huge groups — so it exists only as the
-    * oracle-pinned parity witness for the streaming implementation. */
-  def meanPoolDeclarative(df: DataFrame, groupCol: Column, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val exploded = df.select(groupCol.as("g"), col(idCol).as("_id"),
-      posexplode(col(vecCol)).as(Seq("pos", "v")))
-    exploded.groupBy(col("g"), col("pos"))
-      .agg(
-        aggregate(
-          transform(
-            array_sort(collect_list(struct(col("_id"), col("v").cast("double").as("v")))),
-            s => s.getField("v")),
-          lit(0.0), (acc, v) => acc + v).as("sum"),
-        count(lit(1)).as("n"))
-      .select(col("g"), col("pos").cast("long").as("pos"),
-        (col("sum") / col("n")).as("mean"), col("n"))
   }
 }

@@ -307,14 +307,6 @@ object IvfAnn {
   private def sqDist(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     graft.functions.VectorExpressions.sqDist(a, b)
 
-  /** The declarative predecessor, kept as [[sqDist]]'s parity witness. */
-  private[graft] def sqDistDeclarative(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column) =
-    aggregate(zip_with(a, b, (x, y) => {
-      val d = x.cast("double") - y.cast("double")
-      d * d
-    }), lit(0.0), (acc, v) => acc + v)
-
   /** Assign vectors to their nearest existing list — the ingestion half
     * of incremental index maintenance: new corpus batches join the index
     * without retraining. One broadcast of the (tiny) centroid table and

@@ -86,9 +86,11 @@ object LmOps {
     // returned scoring plan reads that SAME cache instead of re-running
     // the tokenize + (doc, token) shuffle — the corpus-sized pass
     // otherwise ran twice per execution (measured r20: the recompute was
-    // the single largest stage of q127/q217/q218). The entry is released
-    // by the ContextCleaner once the returned plan goes unreachable (the
-    // q30 persist contract); bench/tight loops clearCache() between runs.
+    // the single largest stage of q127/q217/q218). The cache entry
+    // outlives this call: the ContextCleaner never drops a persisted
+    // Dataset, and nothing here can unpersist it without re-running the
+    // pass, so it stays until the caller's `clearCache` (Bench and
+    // Verify clear between queries; any other caller leaks it).
     val n = math.max(1L,
       Option(pd.agg(sum(col("k"))).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L))
@@ -161,8 +163,8 @@ object LmOps {
         sum(col("k") * col("sbv")).as("total_surprisal"))
     // pd2 stays persisted: the scoring plan reads the cache the model
     // actions materialized instead of re-running the (doc, bigram)
-    // explode+shuffle per execution (the r20 surprisalScores fix);
-    // ContextCleaner releases it with the plan (the q30 contract)
+    // explode+shuffle per execution (the r20 surprisalScores fix); the
+    // entry outlives this call until the caller's `clearCache`
     docs.select(col(idCol))
       .join(scored, Seq(idCol), "left")
       .select(col(idCol),

@@ -478,17 +478,6 @@ object Multimodal {
     }
   }
 
-  /** The FakeCodec payload bytes as a row-major window×band ENERGY
-    * matrix (32 unsigned bytes = 8 windows × 4 bands) — the fixture
-    * surface for the acoustic-fingerprint family:
-    * [[graft.functions.AudioFingerprint.bandFingerprint]] over this
-    * matrix is the oracle-reproducible twin of the real
-    * [[fingerprintAudio]] path (DuckDB re-derives the same bytes from
-    * the md5 hex chain). Byte extraction is identical to
-    * [[fakeLumaGrid]] — only the downstream adjacency geometry
-    * (temporal deltas vs spatial comparisons) differs. */
-  def fakeBandEnergies(payload: Column): Column = fakeLumaGrid(payload)
-
   /** Per-audio acoustic fingerprint row: `decoded = false` rows carry
     * fingerprint 0 and are quarantined by the caller (the
     * [[decodeImages]] stance — a too-short payload is information,

@@ -83,15 +83,9 @@ object Similarity {
 
   /** Cosine similarity — one-pass native kernel computing dot + both
     * norms in a single traversal with the same fold order as
-    * [[cosineDeclarative]] (bit-identical, parity spec'd). */
+    * `SimilarityWitness.cosineDeclarative` (bit-identical, parity spec'd). */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.cosine(a, b)
-
-  /** Pure-HOF cosine (three interpreted array folds) — parity witness. */
-  def cosineDeclarative(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    when(d > 0, dot(a, b) / d).otherwise(0.0)
-  }
 
   /** Exact top-k cosine neighbors for each query vector.
     * `queries` must be small enough to broadcast (the usual case: a probe
@@ -269,24 +263,11 @@ object Similarity {
 
   /** Random-hyperplane LSH bucket id: one sign bit per plane over the
     * signed sum of vector components. One-pass native kernel against
-    * the baked-in sign matrix ([[lshBucketDeclarative]] is the parity
-    * witness — its per-plane interpreted folds walk the vector
-    * `numPlanes` times). */
+    * the baked-in sign matrix (`SimilarityWitness.lshBucketDeclarative`
+    * is the parity witness — its per-plane interpreted folds walk the
+    * vector `numPlanes` times). */
   def lshBucket(vec: Column, numPlanes: Int, dims: Int): Column =
     graft.functions.VectorExpressions.lshBucket(vec, signMatrix(numPlanes, dims))
-
-  /** Per-plane HOF formulation — parity witness for [[lshBucket]]. */
-  def lshBucketDeclarative(vec: Column, numPlanes: Int, dims: Int): Column = {
-    val m = signMatrix(numPlanes, dims) // computed once, not per plane
-    val bits = (0 until numPlanes).map { p =>
-      val signs = typedlit(m(p).toSeq)
-      val proj = aggregate(
-        zip_with(vec, signs, (x, s) => x.cast("double") * s),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, lit(1 << p)).otherwise(lit(0))
-    }
-    bits.reduce(_ + _)
-  }
 
   /** ANN top-k: only candidates in the query's hyperplane bucket are
     * scored. Recall < 1.0 by construction; callers trade `numPlanes`

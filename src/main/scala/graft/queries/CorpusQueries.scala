@@ -555,8 +555,9 @@ object CorpusQueries {
       val wd = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
       // s2 feeds the minhash pipeline, the keep-best scores, the
       // survivor rejoin, AND the decon gram explode — persist so the
-      // gate + window run once (released by the ContextCleaner when
-      // the returned plan goes unreachable, the q30 contract)
+      // gate + window run once; the entry outlives the query build and
+      // stays until the runner's `clearCache` (Bench and Verify clear
+      // between queries)
       val s2 = s1
         .withColumn("fp",
           md5(regexp_replace(lower(col("text")), "\\s+", " ")))

@@ -789,8 +789,8 @@ object MultimodalQueries {
   /** The q220 pair derivation: [[graft.operators.Dedup
     * .frameSetNearDupPairs]] over the fixture postings at the 500-milli
     * threshold. Postings persist so the frame-sample + grid + hash
-    * pipeline runs once across the operator's joins (released by the
-    * ContextCleaner when the returned plan goes unreachable). */
+    * pipeline runs once across the operator's joins; the entry outlives
+    * the query build and stays until the runner's `clearCache`. */
   private def videoNearDupPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     graft.operators.Dedup.frameSetNearDupPairs(

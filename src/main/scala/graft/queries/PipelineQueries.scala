@@ -18,7 +18,7 @@ object PipelineQueries {
   /** The q205 planted LSH-MISS pair: exact 3-shingle Jaccard 513‰ —
     * over the 0.5 dedup threshold — but the 12-hash / 4-band md5-seeded
     * banding shares NO band (certified by
-    * [[graft.tools.LshMissProbe]], salt 2: 19/37 shingles shared, all
+    * `graft.tools.LshMissProbe`, salt 2: 19/37 shingles shared, all
     * four band keys differ). A true near-dup the LSH stage
     * deterministically misses: the pair lands in SEPARATE components,
     * both survive keep-best, and q205's residual exact stage recovers

@@ -71,9 +71,10 @@ object MultimodalAdmission {
       // the folds have already appended their deltas (side effect);
       // materialize the admitted union while the batch is still
       // persisted, so the returned frame never recomputes the
-      // anti-joins against an unpersisted input (released by the
-      // ContextCleaner when the plan goes unreachable — the q30
-      // contract)
+      // anti-joins against an unpersisted input. The cache entry
+      // outlives this call: the ContextCleaner never drops a persisted
+      // Dataset, so the caller must `unpersist` the returned frame (or
+      // `clearCache`) once it is consumed
       val out = admittedImg.unionByName(admittedAud).unionByName(admittedVid)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       out.count()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.AudioFingerprint
+import graft.functions.{AudioFingerprint, AudioFingerprintWitness}
 import graft.operators.{Dedup, Multimodal}
 
 /** Acoustic band fingerprinting (temporal band-energy deltas) + the
@@ -29,7 +29,7 @@ class AudioHashSpec extends AnyFunSuite {
     val df = mats.toDF("id", "energies")
     val got = df.select(col("id"),
       AudioFingerprint.bandFingerprint(col("energies"), 8, 4).as("k"),
-      AudioFingerprint.bandFingerprintDeclarative(col("energies"), 8, 4).as("d"))
+      AudioFingerprintWitness.bandFingerprintDeclarative(col("energies"), 8, 4).as("d"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val jvm = mats.map { case (i, m) =>
       i -> AudioFingerprint.bandFingerprintJvm(m.toArray, 8, 4)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.CorpusOps
+import graft.operators.{CorpusOps, CorpusOpsWitness}
 
 /** CorpusOps semantics the q65-q68 oracles can't exercise: the hot-gram
   * cap accounting, split stability under corpus growth, and the packing
@@ -370,7 +370,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) ->
         (r.getInt(1), r.getInt(2), r.getDouble(3), r.getDouble(4))).toMap
     val k = key(CorpusOps.repetitionSignals(corpus))
-    val d = key(CorpusOps.repetitionSignalsDeclarative(corpus))
+    val d = key(CorpusOpsWitness.repetitionSignalsDeclarative(corpus))
     assert(k.keySet == d.keySet)
     k.foreach { case (id, v) => assert(d(id) == v, s"doc $id: $v vs ${d(id)}") }
     // sanity on the edge semantics

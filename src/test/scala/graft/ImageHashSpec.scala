@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.ImageHash
+import graft.functions.{ImageHash, ImageHashWitness}
 import graft.operators.{Dedup, Multimodal}
 
 /** Perceptual image hashing (dHash) + Hamming-band near-dup pairing:
@@ -27,7 +27,7 @@ class ImageHashSpec extends AnyFunSuite {
     val df = grids.toDF("id", "grid")
     val got = df.select(col("id"),
       ImageHash.dHashGrid(col("grid"), 7, 4).as("k"),
-      ImageHash.dHashGridDeclarative(col("grid"), 7, 4).as("d"))
+      ImageHashWitness.dHashGridDeclarative(col("grid"), 7, 4).as("d"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val jvm = grids.map { case (i, g) =>
       i -> ImageHash.dHashGridJvm(g.toArray, 7, 4)

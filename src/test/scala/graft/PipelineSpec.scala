@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, DedupWitness, Similarity, SimilarityWitness}
 
 /** API-level invariants of the dedup/similarity operators that the DuckDB
   * oracle queries (q27-q33) don't cover directly. Runs on sf0.001. */
@@ -82,7 +82,7 @@ class PipelineSpec extends AnyFunSuite {
       .filter(col("doc_id") < col("id2")).limit(200)
     val jp = pairs.select(
       graft.operators.Dedup.jaccard(col("sh"), col("sh2")).as("k"),
-      graft.operators.Dedup.jaccardDeclarative(col("sh"), col("sh2")).as("d")).collect()
+      graft.operators.DedupWitness.jaccardDeclarative(col("sh"), col("sh2")).as("d")).collect()
     assert(jp.nonEmpty)
     jp.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
   }
@@ -252,7 +252,7 @@ class PipelineSpec extends AnyFunSuite {
       .filter(col("ia") < col("ib")).limit(300)
     val cp = pairs.select(
       Similarity.cosine(col("va"), col("vb")).as("k"),
-      Similarity.cosineDeclarative(col("va"), col("vb")).as("d")).collect()
+      SimilarityWitness.cosineDeclarative(col("va"), col("vb")).as("d")).collect()
     assert(cp.nonEmpty)
     cp.foreach(r => assert(r.getDouble(0) == r.getDouble(1))) // bit-exact
 
@@ -272,7 +272,7 @@ class PipelineSpec extends AnyFunSuite {
   test("simhash64 native kernel matches the declarative formulation") {
     val both = docs.limit(100).select(
       Dedup.simhash64(col("text")).as("kernel"),
-      Dedup.simhash64Declarative(col("text")).as("decl")).collect()
+      DedupWitness.simhash64Declarative(col("text")).as("decl")).collect()
     assert(both.nonEmpty)
     both.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
@@ -312,7 +312,7 @@ class PipelineSpec extends AnyFunSuite {
       .toDF("id", "v")
     val got = rows.select(col("id"),
       Similarity.lshBucket(col("v"), 8, 16).as("k"),
-      Similarity.lshBucketDeclarative(col("v"), 8, 16).as("d"))
+      SimilarityWitness.lshBucketDeclarative(col("v"), 8, 16).as("d"))
       .collect()
     got.foreach(r => assert(r.getInt(1) == r.getInt(2), s"id ${r.getLong(0)}"))
     assert(got.map(_.getInt(1)).distinct.length > 1) // buckets do spread
@@ -324,14 +324,14 @@ class PipelineSpec extends AnyFunSuite {
         |AS t(id, v)""".stripMargin)
       .select(col("id"),
         Similarity.lshBucket(col("v"), 4, 2).as("k"),
-        Similarity.lshBucketDeclarative(col("v"), 4, 2).as("d"))
+        SimilarityWitness.lshBucketDeclarative(col("v"), 4, 2).as("d"))
       .collect()
     edge.foreach(r => assert(r.getInt(1) == 0 && r.getInt(2) == 0, r.toString))
     // NaN projections: Spark's when(proj > 0) is TRUE for NaN — kernel
     // and witness must set the same bits
     val nan = spark.sql("SELECT array(CAST('NaN' AS FLOAT), 1.0F) AS v")
       .select(Similarity.lshBucket(col("v"), 4, 2).as("k"),
-        Similarity.lshBucketDeclarative(col("v"), 4, 2).as("d"))
+        SimilarityWitness.lshBucketDeclarative(col("v"), 4, 2).as("d"))
       .head()
     assert(nan.getInt(0) == nan.getInt(1), s"NaN parity: $nan")
   }

@@ -130,7 +130,7 @@ class PropertySpec extends AnyFunSuite {
       ShingleExpressions.wordShinglesDistinct(col("text"), 3).as("wk"),
       array_distinct(TextFunctions.wordShingles(col("text"), 3)).as("wd"),
       graft.operators.Dedup.simhash64(col("text")).as("sk"),
-      graft.operators.Dedup.simhash64Declarative(col("text")).as("sd"),
+      graft.operators.DedupWitness.simhash64Declarative(col("text")).as("sd"),
       graft.functions.LangQualityExpr.of(col("text")).as("lq"),
       TextFunctions.langIdHeuristic(col("text")).as("dl"),
       TextFunctions.qualityScore(col("text")).as("dq"),
@@ -213,7 +213,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("normalize kernel matches the declarative HOF pair bit-for-bit") {
     import spark.implicits._
-    import graft.operators.Embeddings
+    import graft.operators.{Embeddings, EmbeddingsWitness}
     // adversarial vectors: zeros, tiny/huge magnitudes, mixed signs
     val vecs = Seq(
       Array(0.0f, 0.0f, 0.0f),
@@ -226,7 +226,7 @@ class PropertySpec extends AnyFunSuite {
       .toDF("id", "v")
       .select(
         Embeddings.normalize(col("v")).as("k"),
-        Embeddings.normalizeDeclarative(col("v")).as("d")).collect()
+        EmbeddingsWitness.normalizeDeclarative(col("v")).as("d")).collect()
     rows.foreach { r =>
       assert(r.getSeq[Double](0) == r.getSeq[Double](1), r.toString)
     }
@@ -234,7 +234,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("quantizeInt8 kernel: declarative parity, code range, dequant bound") {
     import spark.implicits._
-    import graft.operators.Embeddings
+    import graft.operators.{Embeddings, EmbeddingsWitness}
     // adversarial vectors: zeros, single element, tiny/huge magnitudes,
     // mixed signs, exact half-step boundaries (x/scale + 0.5 integral)
     val vecs = Seq(
@@ -248,7 +248,7 @@ class PropertySpec extends AnyFunSuite {
       .toDF("id", "v")
       .select(col("id"), col("v"),
         Embeddings.quantizeInt8(col("v")).as("k"),
-        Embeddings.quantizeInt8Declarative(col("v")).as("d"))
+        EmbeddingsWitness.quantizeInt8Declarative(col("v")).as("d"))
       .select(col("id"), col("k.codes").as("kc"), col("k.scale").as("ks"),
         col("d.codes").as("dc"), col("d.scale").as("ds"), col("v"))
       .collect()
@@ -269,7 +269,7 @@ class PropertySpec extends AnyFunSuite {
     val edge = spark.sql(
       "SELECT array(CAST(NULL AS FLOAT), 2.0F, -1.0F) AS v")
       .select(Embeddings.quantizeInt8(col("v")).as("k"),
-        Embeddings.quantizeInt8Declarative(col("v")).as("d"))
+        EmbeddingsWitness.quantizeInt8Declarative(col("v")).as("d"))
       .select(col("k.codes"), col("k.scale"), col("d.codes"), col("d.scale"))
       .head()
     // scale = 2/127; -1.0/scale = -63.5 -> floor(-63.5 + 0.5) = -63
@@ -282,7 +282,7 @@ class PropertySpec extends AnyFunSuite {
     val nan = spark.sql(
       "SELECT array(CAST('NaN' AS FLOAT), 2.0F) AS v")
       .select(Embeddings.quantizeInt8(col("v")).as("k"),
-        Embeddings.quantizeInt8Declarative(col("v")).as("d"))
+        EmbeddingsWitness.quantizeInt8Declarative(col("v")).as("d"))
       .select(col("k.codes"), col("k.scale"), col("d.codes"), col("d.scale"))
       .head()
     assert(nan.getSeq[Any](0) == Seq(0, 0))
@@ -292,7 +292,7 @@ class PropertySpec extends AnyFunSuite {
     // witness must not decay to struct(codes=NULL, scale=0.0))
     val nul = spark.sql("SELECT CAST(NULL AS ARRAY<FLOAT>) AS v")
       .select(Embeddings.quantizeInt8(col("v")).as("k"),
-        Embeddings.quantizeInt8Declarative(col("v")).as("d"))
+        EmbeddingsWitness.quantizeInt8Declarative(col("v")).as("d"))
       .head()
     assert(nul.isNullAt(0) && nul.isNullAt(1), s"NULL-vec parity: $nul")
   }
@@ -346,7 +346,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("meanPool streaming fold: declarative parity, partitioning invariance, skewed group") {
     import spark.implicits._
-    import graft.operators.Embeddings
+    import graft.operators.{Embeddings, EmbeddingsWitness}
     // group 0 holds 20k members (≫ the rest) — the declarative witness
     // materializes it per cell; the streaming fold must not care.
     val rows = (0 until 21000).map { i =>
@@ -365,7 +365,7 @@ class PropertySpec extends AnyFunSuite {
     assert(run(df.repartition(13)).sameElements(base))
     assert(run(df.repartition(1)).sameElements(base))
     // and bit-identical to the collect_list parity witness
-    val witness = Embeddings.meanPoolDeclarative(df, col("grp"))
+    val witness = EmbeddingsWitness.meanPoolDeclarative(df, col("grp"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .sortBy(t => (t._1, t._2))
     assert(witness.sameElements(base))
@@ -381,7 +381,7 @@ class PropertySpec extends AnyFunSuite {
     }.toDF("id", "a", "b")
     val got = rows.select(col("id"),
       graft.functions.VectorExpressions.sqDist(col("a"), col("b")).as("k"),
-      graft.operators.IvfAnn.sqDistDeclarative(col("a"), col("b")).as("h"))
+      graft.operators.IvfAnnWitness.sqDistDeclarative(col("a"), col("b")).as("h"))
       .collect()
     // bit-identical (same fold order and promotion), not just close —
     // nearest-centroid tie-breaks depend on it
@@ -398,7 +398,7 @@ class PropertySpec extends AnyFunSuite {
         |AS t(id, a, b)""".stripMargin)
       .select(col("id"),
         graft.functions.VectorExpressions.sqDist(col("a"), col("b")).as("k"),
-        graft.operators.IvfAnn.sqDistDeclarative(col("a"), col("b")).as("h"))
+        graft.operators.IvfAnnWitness.sqDistDeclarative(col("a"), col("b")).as("h"))
       .orderBy("id").collect()
     assert(edge(0).isNullAt(1) && edge(0).isNullAt(2)) // null element
     assert(edge(1).isNullAt(1) && edge(1).isNullAt(2)) // length mismatch
