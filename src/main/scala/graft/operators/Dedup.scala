@@ -318,32 +318,15 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
 
-  /** Bit i (0-based, LSB-first within the first 16 bits) of a token's
-    * md5: hex digit i/4, bit (3 - i%4) of that nibble. */
-  private def md5Bit16(h: Column, i: Int): Column = {
-    val nibble = conv(substring(h, i / 4 + 1, 1), 16, 10).cast("int")
-    floor(nibble / (1 << (3 - i % 4))).cast("int") % 2
-  }
-
   /** 16-bit SimHash from md5 nibbles — cross-engine reproducible (the
     * DuckDB oracle re-derives it from the same md5 hex). Each distinct
     * token votes ±1 per bit; the fingerprint takes the majority.
     * Computed by the one-pass native expression (one md5 per token
-    * instead of 16). [[simhash16Declarative]] keeps the pure-builtin
-    * formulation the oracle SQL mirrors. */
+    * instead of 16). `DedupWitness.simhash16Declarative` keeps the
+    * pure-builtin formulation the oracle SQL mirrors (PipelineSpec
+    * asserts kernel == declarative on the planted documents). */
   def simhash16(textCol: Column): Column =
     graft.functions.HashExpressions.simhash16(array_distinct(tokens(textCol)))
-
-  /** Pure-builtin SimHash (16 filter passes) — reference formulation. */
-  def simhash16Declarative(textCol: Column): Column = {
-    val toks = array_distinct(tokens(textCol))
-    val bits = (0 until 16).map { i =>
-      val ones = size(filter(toks, t => md5Bit16(md5(t), i) === 1))
-      val votes = ones * 2 - size(toks) // ones - (n - ones)
-      when(votes > 0, lit(1 << i)).otherwise(lit(0))
-    }
-    bits.reduce(_ + _)
-  }
 
   /** 64-bit SimHash via xxhash64 — the production variant (Spark-only;
     * xxhash64 has no DuckDB equivalent so the oracle uses simhash16).
@@ -936,13 +919,24 @@ object Dedup {
     * closure that turns pairwise matches into dedup clusters with a
     * canonical representative (keep comp == id, drop the rest).
     *
-    * Iterative min-label propagation — but ONLY over the frontier (nodes
-    * that appear in at least one edge): a node with no edges can never
-    * change labels, so looping it is pure shuffle waste. For a near-dup
-    * graph the frontier is a tiny fraction of the corpus (pairs ≪ docs),
-    * which turns each round's shuffles from O(corpus) into O(endpoints).
-    * Isolated nodes are re-attached once at the end via a left join with
-    * comp defaulting to the node's own id.
+    * Small graphs finish on the driver: when the symmetrized edge set
+    * has at most `localFinishEdges` rows (default [[LocalFinishEdges]],
+    * 2^18, which bounds the driver memory of this path to about 40 MB)
+    * and the ids are Long or Int, the edges are collected and solved by
+    * union-find in one pass, and the labels return as a broadcast local
+    * relation — no propagation rounds (0 reported), so `maxIter` does
+    * not apply and a long chain under the cap closes instead of
+    * throwing. Above the cap (or for any other id type) the distributed
+    * rounds below run; deciding reads at most cap + 1 edge rows. Both
+    * paths give the same rows and schema (CcLocalFinishSpec).
+    *
+    * Distributed path: iterative min-label propagation — but ONLY over
+    * the frontier (nodes that appear in at least one edge): a node with
+    * no edges can never change labels, so looping it is pure shuffle
+    * waste. For a near-dup graph the frontier is a tiny fraction of the
+    * corpus (pairs ≪ docs), which turns each round's shuffles from
+    * O(corpus) into O(endpoints). Isolated nodes are re-attached once at
+    * the end via a left join with comp defaulting to the node's own id.
     *
     * Convergence in ≤ graph-diameter rounds (near-dup clusters are
     * shallow — dup pairs and small chains — so typically 2-3), with two
@@ -952,8 +946,9 @@ object Dedup {
     * terminating round is a near-empty probe instead of a full
     * propagation+compare; (b) the change test is a narrow filter over
     * the round's already-materialized output, never a separate
-    * labels⋈labels join. `maxIter` is a safety bound — hitting it
-    * throws rather than returning silently-unconverged labels.
+    * labels⋈labels join. `maxIter` is a safety bound on the distributed
+    * path — hitting it throws rather than returning silently-unconverged
+    * labels.
     *
     * Lineage/fault story: by default each round is cut with
     * `localCheckpoint(true)` — eager executor-stored blocks with NO
@@ -975,9 +970,22 @@ object Dedup {
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       idCol: String = "id", aCol: String = "id_a", bCol: String = "id_b",
       maxIter: Int = 20, checkpointDir: Option[String] = None,
-      checkpointEvery: Int = 5): DataFrame =
+      checkpointEvery: Int = 5,
+      localFinishEdges: Int = LocalFinishEdges): DataFrame =
     connectedComponentsWithRounds(nodes, pairs, idCol, aCol, bCol,
-      maxIter, checkpointDir, checkpointEvery)._1
+      maxIter, checkpointDir, checkpointEvery, localFinishEdges)._1
+
+  /** Symmetric edge rows (each pair counts twice) up to which
+    * [[connectedComponents]] finishes on the driver instead of running
+    * propagation rounds. It bounds the driver memory of that path: at
+    * most cap + 1 rows are collected (about 80 bytes each as `Row`s,
+    * ~21 MB at 2^18), plus per edge row two `Long`s and per endpoint
+    * about 60 bytes (id, union-find parent, two local-relation rows) —
+    * roughly 40 MB in all at the cap. All but the label relation (at
+    * most 2^18 id pairs, held by the returned plan) is released on
+    * return. Callers pass another value only to pin both sides of the
+    * cap in specs. */
+  val LocalFinishEdges: Int = 1 << 18
 
   /** Keep-BEST dedup policy over near-dup components: per component,
     * survive the member with the highest quality score (ties broken by
@@ -1049,12 +1057,17 @@ object Dedup {
 
   /** [[connectedComponents]] plus the number of propagation rounds run —
     * the early-exit witness (a pair-only graph must cost exactly 2: one
-    * full round, one frontier-only probe that finds no changes). */
+    * full round, one frontier-only probe that finds no changes). The
+    * driver-local finish (at most `localFinishEdges` symmetric edge
+    * rows) runs no rounds and reports 0; `maxIter` bounds only the
+    * distributed rounds. */
   def connectedComponentsWithRounds(nodes: DataFrame, pairs: DataFrame,
       idCol: String = "id", aCol: String = "id_a", bCol: String = "id_b",
       maxIter: Int = 20, checkpointDir: Option[String] = None,
-      checkpointEvery: Int = 5): (DataFrame, Int) = {
+      checkpointEvery: Int = 5,
+      localFinishEdges: Int = LocalFinishEdges): (DataFrame, Int) = {
     require(checkpointEvery > 0, "checkpointEvery must be positive")
+    require(localFinishEdges >= 0, "localFinishEdges must be non-negative")
     // only set the context checkpoint dir when none is configured — the
     // application may have pointed it at durable storage globally, and
     // silently redirecting every other checkpoint user would be rude
@@ -1085,6 +1098,10 @@ object Dedup {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    localFinish(nodes, idCol, edges, localFinishEdges) match {
+      case Some(comps) => edges.unpersist(); return (comps, 0)
+      case None =>
+    }
     // symmetric edges ⇒ the src column alone covers every endpoint
     var labels = materialize(edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id")), 0)
@@ -1142,6 +1159,72 @@ object Dedup {
     val canon = nodeLabels.groupBy(col("raw_comp"))
       .agg(min(col("id")).as("comp"))
     (nodeLabels.join(canon, Seq("raw_comp")).select(col("id"), col("comp")), iter)
+  }
+
+  /** The driver-local finish of [[connectedComponentsWithRounds]]: None
+    * when the ids are not Long/Int or `edges` (symmetric src/dst) has
+    * more than `cap` rows — only cap + 1 rows are read to decide. Else
+    * union-find over the collected edges, always hanging the larger
+    * root under the smaller, then each component maps to its minimum
+    * NODE id (one broadcast semi-join of `nodes` against the endpoints
+    * says which endpoints are nodes; the others only relay). */
+  private def localFinish(nodes: DataFrame, idCol: String, edges: DataFrame,
+      cap: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
+      StructType}
+    val idType = nodes.select(col(idCol)).schema.head.dataType
+    if ((idType != LongType && idType != IntegerType) ||
+        edges.schema("src").dataType != idType) return None
+    val rows = edges.limit(cap + 1).collect()
+    if (rows.length > cap) return None
+    def id(r: Row, i: Int): Long =
+      if (idType == LongType) r.getLong(i) else r.getInt(i).toLong
+    // a null endpoint never joins in the distributed rounds: drop it
+    val live = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val (src, dst) = (live.map(id(_, 0)), live.map(id(_, 1)))
+    // symmetric edges ⇒ src covers every endpoint; sorted, so the
+    // smaller index is the smaller id
+    val endpoints = src.distinct.sorted
+    def index(v: Long): Int = java.util.Arrays.binarySearch(endpoints, v)
+    val parent = Array.tabulate(endpoints.length)(identity)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    src.indices.foreach { k =>
+      val (a, b) = (find(index(src(k))), find(index(dst(k))))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val box: Long => Any =
+      if (idType == LongType) v => v else v => v.toInt
+    def local(cols: Seq[String], data: Seq[Row]): DataFrame =
+      nodes.sparkSession.createDataFrame(java.util.Arrays.asList(data: _*),
+        StructType(cols.map(StructField(_, idType))))
+    val isNode = new Array[Boolean](endpoints.length)
+    if (endpoints.nonEmpty)
+      nodes.select(col(idCol).as("id"))
+        .join(broadcast(local(Seq("id"), endpoints.toSeq.map(v => Row(box(v))))),
+          Seq("id"), "left_semi")
+        .collect().foreach(r => isNode(index(id(r, 0))) = true)
+    // ascending scan ⇒ the first node met in a component is its minimum
+    val compMin = Array.fill(endpoints.length)(-1)
+    endpoints.indices.foreach { i =>
+      val root = find(i)
+      if (isNode(i) && compMin(root) < 0) compMin(root) = i
+    }
+    val labels = endpoints.indices.filter(isNode).map(i =>
+      Row(box(endpoints(i)), box(endpoints(compMin(find(i))))))
+    // a null node id never meets its canonical row in the distributed
+    // path's final join, so it emits no row there either
+    Some(nodes.select(col(idCol).as("id")).filter(col("id").isNotNull)
+      .join(broadcast(local(Seq("id", "comp"), labels)), Seq("id"), "left")
+      // an edgeless node is its own component; `when` (not coalesce)
+      // keeps comp nullable, as the distributed path's min() is
+      .select(col("id"),
+        when(col("comp").isNull, col("id")).otherwise(col("comp"))
+          .as("comp")))
   }
 
   /** [[connectedComponents]] by min-label POINTER DOUBLING — the

@@ -85,13 +85,16 @@ object MultimodalAdmission {
   /** foreachBatch sink over a (modality, id, key) stream. `onAdmitted`
     * observes each micro-batch's admitted (modality, id) rows (stats,
     * routing); default discards them — the stores are the durable
-    * output. */
+    * output. The admitted frame is released once `onAdmitted` returns,
+    * so the callback must consume it (collect, write) rather than keep
+    * it for later. */
   def sink(image: HammingCfg, audio: HammingCfg, video: FrameCfg,
       onAdmitted: DataFrame => Unit = _ => ())
       : (Dataset[Row], Long) => Unit =
     (batch, batchId) =>
       if (!batch.isEmpty) {
-        onAdmitted(ingest(batch.toDF(), f"b$batchId%09d", image, audio, video))
-        ()
+        val admitted =
+          ingest(batch.toDF(), f"b$batchId%09d", image, audio, video)
+        try onAdmitted(admitted) finally { admitted.unpersist(); () }
       }
 }

@@ -474,7 +474,8 @@ class CorpusOpsSpec extends AnyFunSuite {
     // the reference needs diameter-many rounds — this near-threshold
     // random graph exceeds the 20-round default (itself evidence for
     // the doubling variant); 500 is safely past any 400-node diameter
-    val prop = Dedup.connectedComponents(ids, edges, maxIter = 500)
+    val prop = Dedup.connectedComponents(ids, edges, maxIter = 500,
+      localFinishEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dbl = Dedup.connectedComponentsDoubling(ids, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -491,7 +492,8 @@ class CorpusOpsSpec extends AnyFunSuite {
     val ids = (0L until n).toDF("id")
     val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("id_a", "id_b")
     intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(ids, chain) // maxIter 20 < diameter
+      // maxIter 20 < diameter
+      Dedup.connectedComponents(ids, chain, localFinishEdges = 0)
     }
     val (comps, rounds) =
       Dedup.connectedComponentsDoublingWithRounds(ids, chain)
@@ -628,7 +630,8 @@ class CorpusOpsSpec extends AnyFunSuite {
     import graft.operators.Dedup
     val nodes = (1L to 8L).toDF("id")
     val pairs = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("id_a", "id_b")
-    val (comp, rounds) = Dedup.connectedComponentsWithRounds(nodes, pairs)
+    val (comp, rounds) = Dedup.connectedComponentsWithRounds(nodes, pairs,
+      localFinishEdges = 0)
     val m = comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L,
       5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 8L))
@@ -648,12 +651,12 @@ class CorpusOpsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // every round durable (pure-checkpoint path)
     val ck1 = Dedup.connectedComponents(nodes, pairs,
-      checkpointDir = Some(dir), checkpointEvery = 1)
+      checkpointDir = Some(dir), checkpointEvery = 1, localFinishEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ck1 == base)
     // mixed path: durable every 2nd round, lineage-bearing persist between
     val ck2 = Dedup.connectedComponents(nodes, pairs,
-      checkpointDir = Some(dir), checkpointEvery = 2)
+      checkpointDir = Some(dir), checkpointEvery = 2, localFinishEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ck2 == base)
     // the durable cuts were actually written
@@ -689,7 +692,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     // checkpoint FILES on disk — identical components, no failure
     val beforeReliable = sc.getPersistentRDDs.keySet.toSet
     val comp = Dedup.connectedComponents(nodes, pairs,
-      checkpointDir = Some(dir), checkpointEvery = 2)
+      checkpointDir = Some(dir), checkpointEvery = 2, localFinishEdges = 0)
     val healthy = comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     kill(beforeReliable)
     assert(freshCollect(comp) == healthy, "components changed across recovery")
@@ -698,7 +701,8 @@ class CorpusOpsSpec extends AnyFunSuite {
     // lineage, so the same kill makes re-evaluation IMPOSSIBLE — this is
     // exactly the unrecoverability the reliable mode exists to fix
     val beforeLocal = sc.getPersistentRDDs.keySet.toSet
-    val volatileComp = Dedup.connectedComponents(nodes, pairs)
+    val volatileComp = Dedup.connectedComponents(nodes, pairs,
+      localFinishEdges = 0)
     assert(volatileComp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       == healthy)
     kill(beforeLocal)

@@ -401,4 +401,30 @@ class MultimodalSpec extends AnyFunSuite {
       img.unpersist(); aud.unpersist(); vid.unpersist()
     }
   }
+
+  test("multimodal admission sink releases each micro-batch's admitted frame") {
+    import graft.streaming.MultimodalAdmission
+    import graft.streaming.MultimodalAdmission.{FrameCfg, HammingCfg}
+    import spark.implicits._
+    def tmpDir(p: String) =
+      java.nio.file.Files.createTempDirectory(p).toString
+    val sink = MultimodalAdmission.sink(
+      HammingCfg(tmpDir("mm-leak-img"), 64, 4, 3),
+      HammingCfg(tmpDir("mm-leak-aud"), 64, 4, 3),
+      FrameCfg(tmpDir("mm-leak-vid"), 500),
+      onAdmitted = df => { df.count(); () })
+    // two tiny static micro-batches with every modality present
+    val batches = Seq(
+      Seq(("image", 1L, 0x0f0fL), ("audio", 2L, 0x3c3cL),
+        ("video", 3L, 11L), ("video", 3L, 12L)),
+      Seq(("image", 4L, 0x0f0eL), ("audio", 5L, 0x7777L),
+        ("video", 6L, 21L)))
+    def entries = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
+    val before = entries
+    batches.zipWithIndex.foreach { case (rows, i) =>
+      sink(rows.toDF("modality", "id", "key"), i.toLong)
+      assert(entries == before,
+        s"micro-batch $i left ${entries - before} cache entries")
+    }
+  }
 }

@@ -277,6 +277,14 @@ class PipelineSpec extends AnyFunSuite {
     both.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
+  test("simhash16 native kernel matches the declarative formulation") {
+    val both = planted.select(
+      Dedup.simhash16(col("text")).as("kernel"),
+      DedupWitness.simhash16Declarative(col("text")).as("decl")).collect()
+    assert(both.nonEmpty)
+    both.foreach(r => assert(r.getInt(0) == r.getInt(1)))
+  }
+
   test("hot-bucket cap drops pathological buckets and accounts for them") {
     import spark.implicits._
     // 20 identical boilerplate docs (one quadratic bucket) + the real corpus

@@ -43,6 +43,26 @@ object DedupWitness {
     when(union > 0, inter / union).otherwise(0.0)
   }
 
+  /** Bit i (0-based, LSB-first within the first 16 bits) of a token's
+    * md5: hex digit i/4, bit (3 - i%4) of that nibble. */
+  private def md5Bit16(h: Column, i: Int): Column = {
+    val nibble = conv(substring(h, i / 4 + 1, 1), 16, 10).cast("int")
+    floor(nibble / (1 << (3 - i % 4))).cast("int") % 2
+  }
+
+  /** Pure-builtin 16-bit SimHash (16 filter passes over md5 nibbles) —
+    * the formulation the oracle SQL mirrors; parity witness for the
+    * native kernel. */
+  def simhash16Declarative(textCol: Column): Column = {
+    val toks = array_distinct(tokens(textCol))
+    val bits = (0 until 16).map { i =>
+      val ones = size(filter(toks, t => md5Bit16(md5(t), i) === 1))
+      val votes = ones * 2 - size(toks) // ones - (n - ones)
+      when(votes > 0, lit(1 << i)).otherwise(lit(0))
+    }
+    bits.reduce(_ + _)
+  }
+
   /** Pure-builtin 64-bit SimHash (64 interpreted filter passes over the
     * per-token hash array) — parity witness for the native kernel. */
   def simhash64Declarative(textCol: Column): Column = {
