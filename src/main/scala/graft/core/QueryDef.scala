@@ -27,7 +27,4 @@ final case class QueryDef(
 object QueryDef {
   def apply(oracle: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(fn, Some(oracle))
-
-  def noOracle(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(fn, None)
 }

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.model.{EtlJob, JobStatus, JobType, TransformationRule}
 import graft.rules.RuleCompiler
 
@@ -218,12 +219,11 @@ object JobRunner {
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val merged =
         if (fs.exists(path)) {
-          val bucketRows = spark.read.parquet(warehouse)
+          // materialize the (single-bucket) rows before overwriting the
+          // path they were read from; only this bucket is ever held
+          val bucketRows = Materialize.cut(spark.read.parquet(warehouse)
             .filter(col("bucket") === b) // partition-pruned: one directory read
-            .filter(col("jobId") =!= result.jobId)
-            // materialize the (single-bucket) rows before overwriting the
-            // path they were read from; only this bucket is ever held
-            .localCheckpoint(true)
+            .filter(col("jobId") =!= result.jobId))
           bucketRows.unionByName(row, allowMissingColumns = true)
         } else row
       merged.write.mode("overwrite").partitionBy("bucket").parquet(warehouse)

@@ -45,19 +45,6 @@ object HashKernels {
     new String(out)
   }
 
-  /** Unsigned lexicographic byte compare — equals comparing the hex
-    * renderings, since byte order and hex-string order agree. */
-  def lessThan(a: Array[Byte], b: Array[Byte]): Boolean = {
-    var i = 0
-    while (i < a.length && i < b.length) {
-      val x = a(i) & 0xff
-      val y = b(i) & 0xff
-      if (x != y) return x < y
-      i += 1
-    }
-    a.length < b.length
-  }
-
   // kernel bodies callable from generated code (and nullSafeEval)
 
   def simhash16(toks: ArrayData): Int = {

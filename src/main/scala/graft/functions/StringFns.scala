@@ -52,15 +52,10 @@ object StringFns {
 
   // Convert/validate group (reference: string_utils.hpp:302-361).
   def isNumeric(s: Column): Column = s.rlike("^[0-9]+$")
-  def isInteger(s: Column): Column = s.rlike("^[+-]?[0-9]+$")
   def isFloat(s: Column): Column =
     s.rlike("^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$")
-  def isAlpha(s: Column): Column = s.rlike("^[A-Za-z]+$")
   def isAlphanumeric(s: Column): Column = s.rlike("^[A-Za-z0-9]+$")
   def isWhitespace(s: Column): Column = s.rlike("^[ \\t\\n\\r]*$")
-
-  /** Safe numeric conversion, null on failure (reference to_number<T>). */
-  def toNumberSafe(s: Column): Column = graft.rules.RuleCompiler.stodPrefix(s)
 
   // URL group (reference: string_utils.hpp:407-415). Spark 3.4+ builtins.
   def urlEncode(s: Column): Column = call_function("url_encode", s)

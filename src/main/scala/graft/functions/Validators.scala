@@ -29,8 +29,6 @@ object Validators {
       c.rlike("[A-Z]") && c.rlike("[a-z]") && c.rlike("[0-9]")
 
   def isValidJobId(c: Column): Column = c.rlike("^[a-zA-Z0-9_-]{1,64}$")
-  def isValidUserId(c: Column): Column = c.rlike("^[a-zA-Z0-9_-]{1,32}$")
-  def isValidToken(c: Column): Column = c.rlike("^[a-zA-Z0-9._-]{10,512}$")
 
   /** ISO-8601 with optional millis and Z
     * (reference: src/input_validator.cpp:31). */
@@ -59,10 +57,6 @@ object Validators {
 
   def containsSqlInjection(c: Column): Column = containsAny(c, SqlPatterns)
   def containsXss(c: Column): Column = containsAny(c, XssPatterns)
-
-  /** Path traversal check (reference: src/input_validator.cpp:412-417). */
-  def containsPathTraversal(c: Column): Column =
-    contains(c, lit("..")) || contains(c, lit("./")) || contains(c, lit("\\"))
 
   /** `"`→`'`, `\n\r\t`→space (reference: src/input_validator.cpp:577-587). */
   def sanitizeString(c: Column): Column = translate(c, "\"\n\r\t", "'   ")

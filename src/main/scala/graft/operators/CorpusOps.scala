@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.core.Materialize
 
 /** Corpus-preparation operators a large-scale training-data pipeline
   * needs beyond dedup/similarity: benchmark decontamination, stable
@@ -196,8 +197,8 @@ object CorpusOps {
     // is a candidate; only the candidate sliver explodes into the exact
     // confirm join (which removes bloom false positives; false
     // negatives are impossible — same kernel keys both sides)
-    val grams = cappedBenchGrams(bench, n, maxDf, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val grams = Materialize.detached(
+      cappedBenchGrams(bench, n, maxDf, idCol, textCol))
     val bloomBytes = benchWindowBloomBytes(grams.select(col("g")).distinct(), n, fpp)
     val candidates = train.filter(exists(tokenWindowHashes(col(textCol), n),
       h => bloomMightContainLong(bloomBytes, h)))
@@ -769,15 +770,12 @@ object CorpusOps {
     * (applied). */
   private def dupSpanIslands(toks: DataFrame, n: Int): DataFrame = {
     require(n > 0, "span length must be positive")
-    // persist the gram stream: the firsts aggregation AND the join-back
+    // detach the gram stream: the firsts aggregation AND the join-back
     // each consume it, and without the cache the tokenize + n-slice-zip
     // + one-md5-per-position pass (the operator's dominant cost) runs
     // twice per execution. Narrow (doc_id, pos, fp) rows — the same
-    // corpus-sized-cache trade as similarityJoin's shingle table. The
-    // entry outlives this call (the ContextCleaner never drops a
-    // persisted Dataset) and stays until the caller's `clearCache`.
-    val grams = spanGrams(toks, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // corpus-sized-cache trade as similarityJoin's shingle table.
+    val grams = Materialize.detached(spanGrams(toks, n))
     val firsts = grams.groupBy(col("fp"))
       .agg(min(struct(col("doc_id"), col("pos"))).as("first"))
     val dups = grams.join(firsts, "fp")
@@ -808,11 +806,10 @@ object CorpusOps {
     val toks = tokensFrame(newDocs, idCol, textCol)
     val nTok = toks.select(col("doc_id"),
       org.apache.spark.sql.functions.size(col("ts")).cast("long").as("n_tokens"))
-    // persisted for the same reason as dupSpanIslands' gram cache — and
+    // detached for the same reason as dupSpanIslands' gram stream — and
     // one better: THREE consumers here (store probe, firsts aggregation,
     // join-back), so the uncached form pays the per-position md5 pass 3×
-    val grams = spanGrams(toks, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val grams = Materialize.detached(spanGrams(toks, n))
     val storeHits = grams
       .join(storeFps.select(col("fp")).distinct(), Seq("fp"), "left_semi")
       .select(col("doc_id"), col("pos"))
@@ -1151,7 +1148,7 @@ object CorpusOps {
     val spark = batch.sparkSession
     val exclude = Some(s"b$batchId")
     val stored = storedSpanItems(spark, storeDir, exclude)
-    val admitted = (if (stored > bloomCapacity) {
+    val admittedPlan = if (stored > bloomCapacity) {
         // a never-streamed store entering directly in the exact regime
         // still gets its one-time bootstrap filter, so the filter set
         // stays complete for any direct rollingSpanBloom consumer
@@ -1163,20 +1160,17 @@ object CorpusOps {
           storeDir, excludeDelta = exclude), n, idCol)
       } else
         spanGate(batch, rollingSpanBloom(spark, storeDir, fpp, bloomCapacity,
-          excludeBatchId = exclude), n))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+          excludeBatchId = exclude), n)
+    Materialize.scope { m =>
+      val admitted = m.keep(admittedPlan)
       sink(admitted, batchId)
-      val fps = spanFingerprints(admitted, n, idCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        graft.sources.FingerprintStore.appendDelta(fps, storeDir, s"b$batchId")
-        val (bytes, items) = spanDeltaBloomBytesCounted(fps, fpp, bloomCapacity)
-        graft.sources.BloomStore.write(spark, bytes,
-          s"$storeDir/bloom/b$batchId.bloom")
-        writeSpanItemCount(spark, s"$storeDir/bloom/b$batchId.bloom.n", items)
-      } finally fps.unpersist()
-    } finally admitted.unpersist()
+      val fps = m.keep(spanFingerprints(admitted, n, idCol))
+      graft.sources.FingerprintStore.appendDelta(fps, storeDir, s"b$batchId")
+      val (bytes, items) = spanDeltaBloomBytesCounted(fps, fpp, bloomCapacity)
+      graft.sources.BloomStore.write(spark, bytes,
+        s"$storeDir/bloom/b$batchId.bloom")
+      writeSpanItemCount(spark, s"$storeDir/bloom/b$batchId.bloom.n", items)
+    }
   }
 
   /** [[duplicatedSpans]] APPLIED: the corpus that continues down the
@@ -1684,16 +1678,12 @@ object CorpusOps {
     val firstFail = stages.zipWithIndex.foldRight(lit(-1)) {
       case (((_, pass), i), acc) => when(not(pass), lit(i)).otherwise(acc)
     }
-    // persist the (≤ stages+1)-row aggregate: the `total` action below
-    // materializes it, and the returned frame reuses the cached rows —
+    // detach the (≤ stages+1)-row aggregate: the `total` action below
+    // materializes it, and the returned frame reuses the same rows —
     // without this the corpus would be scanned twice (once for total,
-    // once when the caller collects), breaking the one-pass claim.
-    // Unpersisting here would reintroduce exactly that rescan, so the
-    // (tiny) entry outlives this call and stays until the caller's
-    // `clearCache` (the ContextCleaner never drops a persisted Dataset)
-    val ffCounts = docs.select(firstFail.as("ff"))
-      .groupBy(col("ff")).agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // once when the caller collects), breaking the one-pass claim
+    val ffCounts = Materialize.detached(docs.select(firstFail.as("ff"))
+      .groupBy(col("ff")).agg(count(lit(1)).as("n")))
     val total = ffCounts.agg(coalesce(sum(col("n")), lit(0L)))
       .head().getLong(0)
     val dim = stages.zipWithIndex.map { case ((name, _), i) => (i, name) }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.TextFunctions._
 
 /** Deduplication operators for training-data pipelines, each designed for
@@ -145,30 +146,26 @@ object Dedup {
     * filtered slice of a persisted [[graft.sources.MinHashStore]]). */
   def lshCandidateQualityOf(sampleMh: DataFrame, threshold: Double)
       : DataFrame = {
-    val mh = sampleMh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sh = mh.select(col("id"), col("shingles"))
+    val sh = sampleMh.select(col("id"), col("shingles"))
     val truth = sh.select(col("id").as("id_a"), col("shingles").as("sh_a"))
       .join(sh.select(col("id").as("id_b"), col("shingles").as("sh_b")),
         col("id_a") < col("id_b"))
       .filter(jaccard(col("sh_a"), col("sh_b")) >= threshold)
       .select(col("id_a"), col("id_b"))
-    val cand = mh.select(col("id").as("id_a"), explode(col("band_keys")).as("bk"))
-      .join(mh.select(col("id").as("id_b"), explode(col("band_keys")).as("bk")),
+    val cand = sampleMh.select(col("id").as("id_a"), explode(col("band_keys")).as("bk"))
+      .join(sampleMh.select(col("id").as("id_b"), explode(col("band_keys")).as("bk")),
         Seq("bk"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
     // the three counts are driver-scale scalars (like recallCurve's):
-    // compute them eagerly so the persisted sample can be unpersisted
-    // HERE instead of leaking cached blocks for the session lifetime,
-    // and so re-running actions on the returned 1-row frame never
-    // re-runs the all-pairs truth join
-    val (nTrue, nCand, nHits) =
-      try {
-        val t = truth.count()
-        val c = cand.count()
-        val h = truth.join(cand, Seq("id_a", "id_b")).count()
-        (t, c, h)
-      } finally mh.unpersist()
+    // compute them eagerly, over the sample kept for just these actions,
+    // so re-running actions on the returned 1-row frame never re-runs
+    // the all-pairs truth join
+    val (nTrue, nCand, nHits) = Materialize.scope { s =>
+      s.keep(sampleMh)
+      (truth.count(), cand.count(),
+        truth.join(cand, Seq("id_a", "id_b")).count())
+    }
     val recall = if (nTrue > 0) nHits * 1000L / nTrue else 1000L
     val precision = if (nCand > 0) nHits * 1000L / nCand else 1000L
     val sess = sampleMh.sparkSession
@@ -205,14 +202,14 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(tMilli >= 1 && tMilli <= 1000,
       s"tMilli=$tMilli outside [1, 1000]")
-    val sh = docs.select(col(idCol).as("id"),
+    val shPlan = docs.select(col(idCol).as("id"),
       graft.functions.ShingleExpressions
         .wordShinglesDistinct(col(textCol), shingleSize).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Materialize.detached(shPlan)
     val e = sh.select(col("id"), size(col("toks")).as("sz"),
       explode(col("toks")).as("t"))
     val cand = prefixCandidatePairs(e, tMilli)
-    // exact verify on candidates only, against the PERSISTED per-doc
+    // exact verify on candidates only, against the DETACHED per-doc
     // shingle ARRAYS: two id-keyed candidate-bounded joins and a
     // row-local array_intersect. Round 19: this replaced the
     // occurrence-level form (cand ⋈ e on id_a, then ⋈ e on (id_b, t),
@@ -289,18 +286,16 @@ object Dedup {
   /** Full MinHash-LSH near-dup pipeline: candidates → exact-Jaccard
     * verification → pairs over threshold.
     *
-    * The per-doc shingle/signature table is persisted (MEMORY_AND_DISK):
-    * it is O(corpus) — the right thing to cache even at 100 TB scale,
-    * where the alternative is recomputing the signature expression for
-    * every one of O(candidate-pairs) rows. The cache entry outlives
-    * the call — the ContextCleaner never drops a persisted Dataset —
-    * so it stays until the caller's `clearCache`. */
+    * The per-doc shingle/signature table is detached: it is O(corpus) —
+    * the right thing to cache even at 100 TB scale, where the
+    * alternative is recomputing the signature expression for every one
+    * of O(candidate-pairs) rows. */
   def minhashNearDupPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", shingleSize: Int = 3, numHashes: Int = 12,
       rowsPerBand: Int = 3, threshold: Double = 0.5,
       maxBucketSize: Option[Int] = None): DataFrame = {
-    val mh = minhashed(docs, idCol, textCol, shingleSize, numHashes, rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val mh = Materialize.detached(
+      minhashed(docs, idCol, textCol, shingleSize, numHashes, rowsPerBand))
     nearDupPairsFromMinhashed(mh, threshold, maxBucketSize)
   }
 
@@ -757,16 +752,6 @@ object Dedup {
     admitted
   }
 
-  /** foreachBatch sink form of [[videoAdmissionIngest]] over an
-    * (id, fhash) posting stream. */
-  def videoAdmissionSink(dir: String, tMilli: Int)
-      : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-    (batch, batchId) =>
-      if (!batch.isEmpty) {
-        videoAdmissionIngest(batch.toDF(), dir, f"b$batchId%09d", tMilli)
-        ()
-      }
-
   /** Streaming exact dedup: keep the first-seen document per content
     * fingerprint across ALL batches — the incremental form of
     * [[dropExactDuplicates]] for a continuously-arriving corpus. State is
@@ -888,17 +873,14 @@ object Dedup {
       case Some(bloom) => udf((s: String) => s != null && bloom.mightContain(s))
       case None        => udf((_: String) => false)
     }
-    // probe ONCE per row, and persist the routed batch so the two union
+    // probe ONCE per row, and detach the routed batch so the two union
     // branches below don't each re-scan + re-digest the input: one
     // materialization (spilling to disk past memory) beats recomputing
     // the md5 over the full batch, which is the dominant per-row cost
-    // this routing exists to bound. Cache lifecycle: the handle is
-    // internal and the entry outlives this call (the ContextCleaner
-    // never drops a persisted Dataset), so a run-over-run caller must
-    // spark.catalog.clearCache() between runs to release it
-    val routed = newDocs.withColumn("fp", storeFingerprint(col(textCol)))
-      .withColumn("maybe_dup", mightContain(col("fp")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // this routing exists to bound
+    val routed = Materialize.detached(
+      newDocs.withColumn("fp", storeFingerprint(col(textCol)))
+        .withColumn("maybe_dup", mightContain(col("fp"))))
     val fresh = routed.filter(!col("maybe_dup")).unionByName(
       routed.filter(col("maybe_dup"))
         .join(store.select(col("fp")), Seq("fp"), "left_anti"))
@@ -950,13 +932,13 @@ object Dedup {
     * path — hitting it throws rather than returning silently-unconverged
     * labels.
     *
-    * Lineage/fault story: by default each round is cut with
-    * `localCheckpoint(true)` — eager executor-stored blocks with NO
+    * Lineage/fault story: by default each round is a local
+    * [[graft.core.Materialize.cut]] — eager executor-stored blocks with NO
     * lineage, the fast choice on a healthy cluster but unrecoverable if
     * an executor dies mid-propagation. For multi-hour 100 TB dedup runs
     * pass `checkpointDir = Some(dir)`: every `checkpointEvery`-th round
     * writes a RELIABLE checkpoint (HDFS/object store) and intermediate
-    * rounds persist WITH lineage, so losing an executor recomputes at
+    * rounds are detached WITH lineage, so losing an executor recomputes at
     * most `checkpointEvery` rounds from the last durable cut instead of
     * failing the job.
     *
@@ -1032,12 +1014,9 @@ object Dedup {
       aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
     // newPairs is typically the tail of an expensive LSH+verify
     // pipeline and is referenced three times below (endpoints, the CC
-    // edge set, and through the untouched-side anti-join) — persist it
-    // so the pipeline runs once. The entry outlives this call, as
-    // [[admitNearDupFree]]'s batch table does: it stays until the
-    // caller's `clearCache`
-    val np = newPairs.select(col(aCol), col(bCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // edge set, and through the untouched-side anti-join) — detach it
+    // so the pipeline runs once
+    val np = Materialize.detached(newPairs.select(col(aCol), col(bCol)))
     val endpoints = np.select(col(aCol).as(idCol))
       .unionByName(np.select(col(bCol).as(idCol))).distinct()
     val affected = storeComps.join(endpoints, Seq(idCol), "left_semi")
@@ -1075,17 +1054,19 @@ object Dedup {
       val sc = nodes.sparkSession.sparkContext
       if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
     }
-    // reliable mode keeps lineage between durable cuts (persist, not
-    // localCheckpoint) so recomputation after executor loss is possible
-    var persistedRounds = List.empty[DataFrame]
+    // reliable mode keeps lineage between durable cuts (detached, not a
+    // local cut) so recomputation after executor loss is possible; a
+    // detached round is released once its successor holds its rows
+    var prevDetached = Option.empty[DataFrame]
     def materialize(df: DataFrame, round: Int): DataFrame = checkpointDir match {
-      case Some(_) if round % checkpointEvery == 0 => df.checkpoint()
       case Some(_) =>
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        persistedRounds ::= p
+        val p =
+          if (round % checkpointEvery == 0) df.checkpoint()
+          else { val d = Materialize.detached(df); d.count(); d }
+        prevDetached.foreach(Materialize.release)
+        prevDetached = Some(p).filter(_ => round % checkpointEvery != 0)
         p
-      case None => df.localCheckpoint(true)
+      case None => Materialize.cut(df)
     }
     // symmetrize with ONE pass over `pairs` (explode, not union): the
     // pair frame is typically the tail of an expensive LSH+verify
@@ -1097,18 +1078,24 @@ object Dedup {
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    localFinish(nodes, idCol, edges, localFinishEdges) match {
-      case Some(comps) => edges.unpersist(); return (comps, 0)
-      case None =>
+    Materialize.scope { s =>
+      s.keep(edges)
+      localFinish(nodes, idCol, edges, localFinishEdges).map((_, 0))
+        .getOrElse(propagate(nodes, idCol, edges, maxIter, materialize))
     }
+  }
+
+  /** The distributed rounds of [[connectedComponentsWithRounds]] over
+    * the symmetric `edges`, each round's labels made by `materialize`. */
+  private def propagate(nodes: DataFrame, idCol: String, edges: DataFrame,
+      maxIter: Int, materialize: (DataFrame, Int) => DataFrame)
+      : (DataFrame, Int) = {
     // symmetric edges ⇒ the src column alone covers every endpoint
     var labels = materialize(edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id")), 0)
     // frontier = labels that changed last round; only THEIR neighbors
     // can improve, so pushing anything else is shuffle waste
     var frontier = labels
-    var lastRound: DataFrame = labels
     var converged = false
     var iter = 0
     val sc = nodes.sparkSession.sparkContext
@@ -1140,14 +1127,8 @@ object Dedup {
       frontier = next.filter(col("chg")).select(col("id"), col("comp"))
       converged = chgAcc.value == 0
       labels = next.select(col("id"), col("comp"))
-      lastRound = next
       iter += 1
     }
-    edges.unpersist()
-    // release intermediate rounds; the FINAL round's frame stays cached —
-    // the returned (lazy) plan reads it, and in reliable mode dropping it
-    // would re-derive every post-checkpoint round on each downstream use
-    persistedRounds.filterNot(_ eq lastRound).foreach(_.unpersist())
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     val nodeLabels = nodes.select(col(idCol).as("id"))
       .join(labels.withColumnRenamed("comp", "frontier_comp"), Seq("id"), "left")
@@ -1265,18 +1246,16 @@ object Dedup {
   /** [[connectedComponentsDoubling]] + the round count it took. */
   def connectedComponentsDoublingWithRounds(nodes: DataFrame,
       pairs: DataFrame, idCol: String = "id", aCol: String = "id_a",
-      bCol: String = "id_b", maxIter: Int = 32): (DataFrame, Int) = {
-    val edges = pairs
+      bCol: String = "id_b", maxIter: Int = 32): (DataFrame, Int) =
+      Materialize.scope { s =>
+    val edges = s.keep(pairs
       .select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def cut(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    var labels = cut(edges.select(col("src").as("id")).distinct()
+      .distinct())
+    var labels = Materialize.cut(edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id")))
-    var lastRound: DataFrame = labels
     var converged = false
     var iter = 0
     val sc = nodes.sparkSession.sparkContext
@@ -1306,7 +1285,7 @@ object Dedup {
         if (chg) chgAcc.add(1L)
         chg
       }.asNondeterministic()
-      val next = cut(labels.withColumn("own", lit(true))
+      val next = Materialize.cut(labels.withColumn("own", lit(true))
         .unionByName(viaEdge).unionByName(jumped)
         .groupBy(col("id")).agg(min(col("comp")).as("comp"),
           min(when(col("own"), col("comp"))).as("_old"))
@@ -1314,10 +1293,8 @@ object Dedup {
           tally(coalesce(col("comp") < col("_old"), lit(false))).as("chg")))
       converged = chgAcc.value == 0
       labels = next.select(col("id"), col("comp"))
-      lastRound = next
       iter += 1
     }
-    edges.unpersist()
     require(converged,
       s"connectedComponentsDoubling did not converge in $maxIter rounds")
     val nodeLabels = nodes.select(col(idCol).as("id"))
@@ -1474,16 +1451,14 @@ object Dedup {
     * doc. Composes [[incrementalNearDupPairs]] (vs the store) with the
     * within-batch pipeline ([[lshCandidatePairs]] → [[jaccard]] →
     * [[dropNearDuplicates]]); the batch's minhashed table is computed
-    * once and persisted for both uses; that cache entry outlives the
-    * call, so an ingestion loop must clearCache() between runs to
-    * release it. Append [[minhashed]] rows
+    * once and detached for both uses. Append [[minhashed]] rows
     * of the admitted docs to the store for the next run. */
   def admitNearDupFree(newDocs: DataFrame, storeMh: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       shingleSize: Int = 3, numHashes: Int = 12, rowsPerBand: Int = 3,
       threshold: Double = 0.5, maxBucketSize: Option[Int] = None): DataFrame = {
-    val mh = minhashed(newDocs, idCol, textCol, shingleSize, numHashes, rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val mh = Materialize.detached(
+      minhashed(newDocs, idCol, textCol, shingleSize, numHashes, rowsPerBand))
     val vsStore = incrementalNearDupPairs(mh, storeMh, threshold, maxBucketSize)
       .select(col("new_id").as(idCol)).distinct()
     val withinPairs = lshCandidatePairs(mh, maxBucketSize)

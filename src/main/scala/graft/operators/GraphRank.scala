@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 
 /** Graph centrality by power iteration — weighted PageRank over an edge
   * frame, and the TextRank instantiation (Mihalcea & Tarau 2004): rank
@@ -46,19 +47,17 @@ object GraphRank {
     require(iters >= 1, "pageRank needs at least one iteration")
     require(dampMilli >= 0L && dampMilli <= 1000L,
       s"dampMilli must be in [0, 1000], got $dampMilli")
-    val nodes = edges.select(col("src").as("id"))
+    val nodes = Materialize.detached(edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val n = nodes.count()
     // pinned double shapes — identical operand order in the oracle SQL
     val damp = dampMilli.toDouble / 1000.0
     val base = (1000L - dampMilli).toDouble / 1000.0 / n.toDouble
     val outW = edges.groupBy(col("src")).agg(sum(col("w")).as("wout"))
-    val e = edges.join(outW, Seq("src"))
+    val e = Materialize.detached(edges.join(outW, Seq("src"))
       .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("wout").cast("double")).as("frac"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (col("w").cast("double") / col("wout").cast("double")).as("frac")))
     var ranks = nodes.select(col("id"), lit(1.0 / n.toDouble).as("r"))
     for (_ <- 1 to iters) {
       val inflow = e.join(ranks.withColumnRenamed("id", "src"), Seq("src"))
@@ -142,11 +141,10 @@ object GraphRank {
     * the corpusStats pattern). */
   def collocations(docs: DataFrame, minCount: Long, kTop: Int,
       textCol: String = "text"): DataFrame = {
-    val uni = docs
+    val uni = Materialize.detached(docs
       .select(explode(graft.functions.TextFunctions.tokens(col(textCol)))
         .as("t"))
-      .groupBy(col("t")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("t")).agg(count(lit(1)).as("c")))
     val n = uni.agg(sum(col("c"))).head().getLong(0)
     // top-k FIRST (TakeOrderedAndProject), then rank the ≤ kTop
     // survivors: a global row_number window over the full filtered pair

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 
 /** IVF (inverted-file) approximate nearest neighbor: learned KMeans
   * centroids partition the corpus into `nlist` lists; a query scores only
@@ -75,10 +76,9 @@ object IvfAnn {
   def build(corpus: DataFrame, nlist: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       iters: Int = BuildIters, restarts: Int = 1)
-      (implicit spark: SparkSession): IvfIndex = {
+      (implicit spark: SparkSession): IvfIndex = Materialize.scope { m =>
     import spark.implicits._
-    val base = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = m.keep(corpus.select(col(idCol).as("id"), col(vecCol).as("v")))
     val dim = base.select(size(col("v"))).head().getInt(0)
     // guards up front, one aggregation pass: (a) the witness's require
     // twin — past this point the farthest-point loop always appends, so
@@ -178,10 +178,10 @@ object IvfAnn {
     val centroids = cents.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("list_id", "centroid")
-    // release the training cache: the returned assignments frame pays
-    // one recompute scan when the caller materializes it — the price
-    // of not leaking a cached corpus copy per build for the session
-    base.unpersist(false)
+    // the training cache is released as the scope exits: the returned
+    // assignments frame pays one recompute scan when the caller
+    // materializes it — the price of not leaking a cached corpus copy
+    // per build for the session
     IvfIndex(assignments, centroids)
   }
 
@@ -384,17 +384,18 @@ object IvfAnn {
     import spark.implicits._
     val corpus = index.assignments
       .select(col("id").as(idCol), col("v").as(vecCol))
-    val truth = Similarity.bruteForceTopK(queries, corpus, k, idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nTrue = truth.count()
-    val rows = nprobes.sorted.map { np =>
-      val hits = topK(queries, index, k, np, idCol, vecCol)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(truth, Seq("query_id", "neighbor_id")).count()
-      (np, hits, nTrue, if (nTrue > 0) hits * 1000L / nTrue else 1000L)
+    val rows = Materialize.scope { m =>
+      val truth = m.keep(
+        Similarity.bruteForceTopK(queries, corpus, k, idCol, vecCol)
+          .select(col("query_id"), col("neighbor_id")))
+      val nTrue = truth.count()
+      nprobes.sorted.map { np =>
+        val hits = topK(queries, index, k, np, idCol, vecCol)
+          .select(col("query_id"), col("neighbor_id"))
+          .join(truth, Seq("query_id", "neighbor_id")).count()
+        (np, hits, nTrue, if (nTrue > 0) hits * 1000L / nTrue else 1000L)
+      }
     }
-    truth.unpersist()
     rows.toDF("nprobe", "n_hits", "n_true", "recall_permille")
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 
 /** Multi-dimensional data layout: Morton (Z-order) interleaving and a
   * z-clustered parquet writer. At 100 TB the scan you never run is the
@@ -150,8 +151,8 @@ object Layout {
       .withColumn("hit",
         (col("a").between(aLo, aHi) && col("b").between(bLo, bHi))
           .cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scope { m =>
+      m.keep(base)
       // ONE pass for both layouts' key maxima (broadcast single row)
       val kmax = base.agg(max(col("a")).as("kmax_a"), max(col("z")).as("kmax_z"))
       def layoutRow(name: String, keyCol: String, kmaxCol: String) = {
@@ -177,15 +178,13 @@ object Layout {
           r.getLong(4))
       }
       // the report is exactly two rows — materialize them while the
-      // projection is cached (one compute + two bucket passes instead
-      // of the old four full md5-spread + Morton scans), then hand back
-      // a LocalRelation so the cache can release eagerly
+      // projection is kept (one compute + two bucket passes instead of
+      // the old four full md5-spread + Morton scans), then hand back a
+      // LocalRelation so the cache can release eagerly
       Seq(layoutRow("linear_a", "a", "kmax_a"),
         layoutRow("zorder_ab", "z", "kmax_z"))
         .toDF("layout", "buckets_used", "buckets_hit", "rows_total",
           "rows_in_hit", "rows_match")
-    } finally {
-      base.unpersist(false)
     }
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.TextFunctions
 
 /** Language-model-flavored corpus operators: unigram surprisal quality
@@ -71,26 +72,21 @@ object LmOps {
     import spark.implicits._
     // (doc, token) partial counts: the only corpus-sized shuffle, and it
     // map-side combines (distinct tokens per doc, not occurrences).
-    // Persisted because three consumers read it: the vocab aggregation,
+    // Detached because three consumers read it: the vocab aggregation,
     // the total-count action, and the scoring plan.
-    val pd = docs
+    val pd = Materialize.detached(docs
       .select(col(idCol), explode(TextFunctions.tokens(col(textCol))).as("t"))
-      .groupBy(col(idCol), col("t")).agg(count(lit(1)).as("k"))
-      .persist()
+      .groupBy(col(idCol), col("t")).agg(count(lit(1)).as("k")))
     val cnt = pd.groupBy(col("t")).agg(sum(col("k")).as("c"))
     // Global scalars become DRIVER LITERALS (the tfIdfTopK nDocs
     // convention): the scoring plan then carries no global-aggregate or
     // single-partition barrier at all — N and the capped vocab are
     // plan-time constants, and the vocab side is a broadcast
-    // LocalRelation. The actions materialize the persisted pd, and the
-    // returned scoring plan reads that SAME cache instead of re-running
+    // LocalRelation. The actions materialize pd's blocks, and the
+    // returned scoring plan reads those SAME blocks instead of re-running
     // the tokenize + (doc, token) shuffle — the corpus-sized pass
     // otherwise ran twice per execution (measured r20: the recompute was
-    // the single largest stage of q127/q217/q218). The cache entry
-    // outlives this call: the ContextCleaner never drops a persisted
-    // Dataset, and nothing here can unpersist it without re-running the
-    // pass, so it stays until the caller's `clearCache` (Bench and
-    // Verify clear between queries; any other caller leaks it).
+    // the single largest stage of q127/q217/q218).
     val n = math.max(1L,
       Option(pd.agg(sum(col("k"))).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L))
@@ -136,12 +132,12 @@ object LmOps {
     import spark.implicits._
     val toks = docs.select(col(idCol),
       TextFunctions.tokens(col(textCol)).as("ts"))
-    val pd2 = toks
+    val pd2Plan = toks
       .select(col(idCol),
         explode(TextFunctions.shinglesFromTokens(col("ts"), 2)).as("g"))
       .filter(size(TextFunctions.tokens(col("g"))) === 2) // drop sub-2-token docs' single-gram rows
       .groupBy(col(idCol), col("g")).agg(count(lit(1)).as("k"))
-      .persist()
+    val pd2 = Materialize.detached(pd2Plan)
     val c2 = pd2.groupBy(col("g")).agg(sum(col("k")).as("c2"))
     val c1 = docs
       .select(explode(TextFunctions.tokens(col(textCol))).as("t"))
@@ -161,10 +157,9 @@ object LmOps {
       .groupBy(col(idCol))
       .agg(sum(col("k")).as("n_bigrams"),
         sum(col("k") * col("sbv")).as("total_surprisal"))
-    // pd2 stays persisted: the scoring plan reads the cache the model
+    // pd2 is detached: the scoring plan reads the blocks the model
     // actions materialized instead of re-running the (doc, bigram)
-    // explode+shuffle per execution (the r20 surprisalScores fix); the
-    // entry outlives this call until the caller's `clearCache`
+    // explode+shuffle per execution (the r20 surprisalScores fix)
     docs.select(col(idCol))
       .join(scored, Seq(idCol), "left")
       .select(col(idCol),
@@ -253,7 +248,6 @@ object LmOps {
       .select(split(col("g"), " ").getItem(0).as("prev"),
         split(col("g"), " ").getItem(1).as("cur"))
       .groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("c2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ctx = c2.groupBy(col("prev"))
       .agg(sum(col("c2")).as("cv"), count(lit(1)).as("nv"))
     val cont = c2.groupBy(col("cur")).agg(count(lit(1)).as("n1w"))
@@ -274,15 +268,11 @@ object LmOps {
         // count-sized, BIGINT-safe at any corpus
         bitLen(expr("CAST(den DIV num AS BIGINT)")).cast("long").as("sb"))
     // The model is ≤ topK rows: materialize it in ONE action over the
-    // persisted counts (four consumers — ctx/cont/top/bign — read c2,
-    // so the corpus shuffles once), then RELEASE the cache and return a
-    // LocalRelation. The fleet discipline: a long-lived application
-    // must not accumulate a per-call corpus-sized cache entry, and a
-    // capped model frame has no business re-touching the corpus when a
-    // downstream consumer re-executes it.
-    val rows =
-      try modelPlan.collect()
-      finally c2.unpersist(false)
+    // kept counts (four consumers — ctx/cont/top/bign — read c2, so the
+    // corpus shuffles once) and return a LocalRelation: a capped model
+    // frame has no business re-touching the corpus when a downstream
+    // consumer re-executes it.
+    val rows = Materialize.scope { s => s.keep(c2); modelPlan.collect() }
     rows.map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
         r.getLong(7), r.getLong(8))).toSeq
@@ -392,8 +382,8 @@ object LmOps {
     * persisted unigram table; everything returned is capped. */
   private def bigramModelFromCounts(c2: DataFrame, c1raw: DataFrame,
       bigramVocab: Int, unigramVocab: Int)
-      : (Map[String, Long], Map[String, Long], Long) = {
-    val c1 = c1raw.persist()
+      : (Map[String, Long], Map[String, Long], Long) = Materialize.scope { s =>
+    val c1 = s.keep(c1raw)
     // ONE action: top bigrams joined to their context counts
     val bigMap = c2
       .withColumn("prev", split(col("g"), " ").getItem(0))
@@ -409,7 +399,6 @@ object LmOps {
     val uniMap = c1.orderBy(col("c1").desc, col("t").asc).limit(unigramVocab)
       .collect().map(r => r.getString(0) -> (bitLenJvm(n / r.getLong(1)) + 1L))
       .toMap
-    c1.unpersist(false)
     (bigMap, uniMap, bitLenJvm(n) + 1L)
   }
 
@@ -447,11 +436,9 @@ object LmOps {
     * [[surprisalScores]] so every value is engine-exact.
     *
     * Plan shape mirrors q127 doubled: ONE (doc, is_target, token)
-    * partial-count aggregation backs BOTH model derivations (persisted
-    * across the model-building driver actions, then RELEASED — the
-    * fleet convention: the returned plan recomputes that aggregation
-    * once per execution rather than pinning a corpus-sized cache entry
-    * for the application's lifetime); the two capped vocab tables are
+    * partial-count aggregation backs BOTH model derivations and the
+    * scoring plan (detached, the [[surprisalScores]] rule); the two
+    * capped vocab tables are
     * driver-built broadcast LocalRelations; no global-aggregate barrier
     * in the scoring plan. Empty documents keep a row with keep=false.
     * Degenerate slices (empty target or background partition) clamp
@@ -459,20 +446,19 @@ object LmOps {
     * the q134 oracle SQL. */
   def contrastScores(docs: DataFrame, targetPred: Column,
       vocabSize: Int = 16, threshMilli: Long = 1500L,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+      Materialize.scope { s =>
     val spark = docs.sparkSession
     import spark.implicits._
-    val pd = docs
+    val pd = Materialize.detached(docs
       .select(col(idCol), targetPred.as("is_target"),
         explode(TextFunctions.tokens(col(textCol))).as("t"))
       .groupBy(col(idCol), col("is_target"), col("t"))
-      .agg(count(lit(1)).as("k"))
-      .persist()
+      .agg(count(lit(1)).as("k")))
     // one aggregation pass yields BOTH models' counts per token
-    val cnt = pd.groupBy(col("t")).agg(
+    val cnt = s.keep(pd.groupBy(col("t")).agg(
       sum(when(col("is_target"), col("k")).otherwise(0L)).as("ct"),
-      sum(when(col("is_target"), 0L).otherwise(col("k"))).as("cb"))
-      .persist()
+      sum(when(col("is_target"), 0L).otherwise(col("k"))).as("cb")))
     def model(countCol: String): (Array[(String, Long)], Long) = {
       val n = math.max(1L,
         Option(cnt.agg(sum(col(countCol))).head().get(0))
@@ -484,7 +470,6 @@ object LmOps {
     }
     val (vocT, oovT) = model("ct")
     val (vocB, oovB) = model("cb")
-    cnt.unpersist(false)
     val tDf = vocT.toSeq.toDF("t", "sbt")
     val bDf = vocB.toSeq.toDF("t", "sbb")
     val scored = pd
@@ -495,8 +480,6 @@ object LmOps {
       .groupBy(col(idCol))
       .agg(sum(col("k")).as("n_tokens"),
         sum(col("k") * col("dv")).as("contrast"))
-    // pd stays persisted — same r20 rule as surprisalScores: the scoring
-    // plan reads the materialized cache, never re-runs the corpus pass
     docs.select(col(idCol))
       .join(scored, Seq(idCol), "left")
       .select(col(idCol),
@@ -511,17 +494,16 @@ object LmOps {
     * deploys — trained by one batch pass over a reference corpus, the
     * exact arithmetic of [[surprisalScores]]. */
   def trainSurprisalVocab(docs: DataFrame, vocabSize: Int = 16,
-      textCol: String = "text"): (Map[String, Long], Long) = {
-    val cnt = docs
+      textCol: String = "text"): (Map[String, Long], Long) =
+      Materialize.scope { s =>
+    val cnt = s.keep(docs
       .select(explode(TextFunctions.tokens(col(textCol))).as("t"))
-      .groupBy(col("t")).agg(count(lit(1)).as("c"))
-      .persist()
+      .groupBy(col("t")).agg(count(lit(1)).as("c")))
     val n = math.max(1L,
       Option(cnt.agg(sum(col("c"))).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L))
     val voc = cnt.orderBy(col("c").desc, col("t").asc).limit(vocabSize)
       .collect().map(r => r.getString(0) -> bitLenJvm(n / r.getLong(1))).toMap
-    cnt.unpersist(false)
     (voc, bitLenJvm(n))
   }
 
@@ -553,11 +535,10 @@ object LmOps {
       keepThreshold: Long = 0L, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     // The hashed feature stream backs both the bucket counts (a driver
-    // action below) and the per-doc probe in the returned plan; the
-    // persist covers the action, and is released before return. Raw and
-    // target counts come out of a single aggregation pass (count +
-    // conditional count), not two scans.
-    val gb = docs
+    // action below) and the per-doc probe in the returned plan, so it is
+    // detached. Raw and target counts come out of a single aggregation
+    // pass (count + conditional count), not two scans.
+    val gb = Materialize.detached(docs
       .select(col(idCol), targetPred.as("is_target"),
         // hoist tokenization to a real column: the shingle lambda must
         // not re-run the regex split per gram (see shinglesFromTokens)
@@ -565,23 +546,17 @@ object LmOps {
       .select(col(idCol), col("is_target"),
         explode(TextFunctions.shinglesFromTokens(col("ts"), 2)).as("g"))
       .select(col(idCol), col("is_target"),
-        CorpusOps.splitBucket(col("g")).as("bucket"))
-      .persist()
+        CorpusOps.splitBucket(col("g")).as("bucket")))
     // The whole ≤10k-row weight table becomes a DRIVER-BUILT broadcast
-    // LocalRelation (the tfIdfTopK nDocs convention, one action over the
-    // persisted gb), so the returned plan contains gb exactly ONCE —
-    // the probe join — with no weight-table subtree to recompute it a
-    // second time. gb is then RELEASED: the plan recomputes the feature
-    // stream once per execution instead of leaking a corpus-sized cache
-    // entry per invocation.
+    // LocalRelation (the tfIdfTopK nDocs convention, one action over
+    // gb), so the returned plan contains gb exactly ONCE — the probe
+    // join — with no weight-table subtree to recompute it a second time.
     val spark = docs.sparkSession
     import spark.implicits._
     val countRows = gb.groupBy(col("bucket")).agg(
       count(lit(1)).as("r"),
       sum(when(col("is_target"), 1L).otherwise(0L)).as("t"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // gb stays persisted — the probe join reads the cache the weight
-    // action materialized (the r20 surprisalScores rule)
     val rt = countRows.map(_._2).sum
     val tt = math.max(1L, countRows.map(_._3).sum)
     val normK = bitLenJvm(math.max(1L, rt / tt))
@@ -663,8 +638,8 @@ object LmOps {
 
   /** APPLY (q183): score every document under the trained weights —
     * the broadcast-weight-table + one-narrow-pass shape (the q128
-    * caching discipline: the feature stream persists across the
-    * driver-built weight table and the probe join, then releases).
+    * discipline: the detached feature stream backs both the
+    * driver-built weight table and the probe join).
     * score = prior + Σ matched-bucket weights over gram occurrences;
     * keep = score > threshold. Every doc emits a row (the 2-gram
     * stream's short-doc fallback gives even an empty doc one gram). */
@@ -672,7 +647,7 @@ object LmOps {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val gb = nbBuckets(docs, posPred, idCol, textCol).persist()
+    val gb = Materialize.detached(nbBuckets(docs, posPred, idCol, textCol))
     val countRows = gb.groupBy(col("bucket"))
       .agg(sum(when(col("is_pos"), 1L).otherwise(0L)).as("c_pos"),
         sum(when(col("is_pos"), 0L).otherwise(1L)).as("c_neg"))
@@ -689,8 +664,6 @@ object LmOps {
       greatest(sum(when(posPred, 1L).otherwise(0L)), lit(1L)),
       greatest(sum(when(posPred, 0L).otherwise(1L)), lit(1L))).head()
     val prior = bitLenJvm(pr.getLong(0)) - bitLenJvm(pr.getLong(1))
-    // gb stays persisted — the probe join reads the cache the count
-    // action materialized (the r20 surprisalScores rule)
     gb.join(broadcast(wDf), Seq("bucket"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_feats"),
@@ -765,17 +738,16 @@ object LmOps {
     * (localCheckpoint here; a reliable checkpoint dir on a real
     * cluster). */
   def bpeTrain(hist: DataFrame, maxMerges: Int,
-      minPairCount: Long = 2L): Seq[BpeMerge] = {
-    var words = hist
+      minPairCount: Long = 2L): Seq[BpeMerge] = Materialize.scope { sc =>
+    var words = sc.keep(hist
       .select(filter(split(col("word"), ""), s => s =!= "").as("syms"),
-        col("n"))
-      .persist()
+        col("n")))
     val merges = scala.collection.mutable.ListBuffer.empty[BpeMerge]
-    // Deferred unpersist: each iteration's argmax job is ALSO the
+    // Deferred release: each iteration's argmax job is ALSO the
     // materialization of the current frame (reading the previous one's
     // cache), so no separate count() job is needed — the previous frame
-    // unpersists only after that argmax has run. Halves the job count
-    // of the training loop versus eager count()-then-unpersist.
+    // is released only after that argmax has run. Halves the job count
+    // of the training loop versus eager count()-then-release.
     var prev: Option[DataFrame] = None
     var done = false
     var rank = 1
@@ -786,7 +758,7 @@ object LmOps {
         .agg(sum(col("n")).as("cnt"))
         .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
         .limit(1).collect()
-      prev.foreach(_.unpersist(false))
+      prev.foreach(sc.release)
       prev = None
       if (best.isEmpty || best(0).getAs[Long]("cnt") < minPairCount) done = true
       else {
@@ -796,17 +768,15 @@ object LmOps {
         val next = words
           .select(mergeOnce(col("syms"), a, b).as("syms"), col("n"))
         // cut lineage every 8 merges so the plan depth stays bounded
-        // (localCheckpoint materializes eagerly; plain persist waits for
-        // the next iteration's argmax)
+        // (the cut materializes eagerly; a kept frame waits for the next
+        // iteration's argmax)
         val materialized =
-          if (rank % 8 == 0) next.localCheckpoint(true) else next.persist()
+          if (rank % 8 == 0) Materialize.cut(next) else sc.keep(next)
         prev = Some(words)
         words = materialized
         rank += 1
       }
     }
-    prev.foreach(_.unpersist(false))
-    words.unpersist()
     merges.toList
   }
 
@@ -863,7 +833,8 @@ object LmOps {
     * Lineage is cut every `checkpointEvery` batches. */
   def bpeTrainFast(hist: DataFrame, maxMerges: Int,
       minPairCount: Long = 2L, maxBatch: Int = 24,
-      checkpointEvery: Int = 12): (Seq[BpeMerge], BpeTrainStats) = {
+      checkpointEvery: Int = 12): (Seq[BpeMerge], BpeTrainStats) =
+      Materialize.scope { sc =>
     import graft.functions.Utf8Order
     val pairOrd: Ordering[((String, String), Long)] =
       Ordering.by[((String, String), Long), (Long, String, String)](
@@ -898,14 +869,11 @@ object LmOps {
     // driver-memory evidence: the pair table is the trainer's only
     // data-shaped driver state — its peak bounds the driver footprint
     var pairPeak = cnt.size()
-    // Release discipline: a plain-persisted frame is dropped as soon as
-    // its successor has materialized (a lost successor partition
-    // recomputes through the lineage back to the last CHECKPOINT, which
-    // stays alive). A localCheckpoint-ed frame has NO lineage behind it
-    // — its blocks are the recompute floor for every later plain frame
-    // — so it is released only when a NEWER checkpoint materializes.
+    // Release discipline: a kept frame is dropped as soon as its
+    // successor has materialized (a lost successor partition recomputes
+    // through the lineage back to the last cut, whose blocks the
+    // ContextCleaner keeps while any later frame's lineage reaches it).
     var lastPlain: Option[DataFrame] = None
-    var lastCheckpoint: Option[DataFrame] = None
     var done = false
     while (!done && merges.size < maxMerges) {
       if (argmax().forall(_._2 < minPairCount)) done = true
@@ -933,8 +901,8 @@ object LmOps {
             col("n"))
         val checkpointed = (batchSizes.size + 1) % checkpointEvery == 0
         val materialized =
-          if (checkpointed) applied.localCheckpoint(false)
-          else applied.persist()
+          if (checkpointed) applied.localCheckpoint(eager = false)
+          else sc.keep(applied)
         val deltaRows = materialized
           .filter(size(col("old")) =!= size(col("syms")))
           .select(explode(
@@ -969,15 +937,8 @@ object LmOps {
         if (reject) truncations += 1
         batchSizes += accepted
         pairPeak = math.max(pairPeak, cnt.size())
-        // release: plain predecessors always (their recompute path ends
-        // at lastCheckpoint); the old checkpoint only once a NEW one
-        // has materialized
-        lastPlain.foreach(_.unpersist(false))
-        lastPlain = None
-        if (checkpointed) {
-          lastCheckpoint.foreach(_.unpersist(false))
-          lastCheckpoint = Some(materialized)
-        } else lastPlain = Some(materialized)
+        lastPlain.foreach(sc.release)
+        lastPlain = if (checkpointed) None else Some(materialized)
         words =
           if (accepted == rules.length) materialized.select(col("syms"), col("n"))
           else if (accepted == 0) materialized.select(col("old").as("syms"), col("n"))
@@ -986,8 +947,6 @@ object LmOps {
               .as("syms"), col("n"))
       }
     }
-    lastPlain.foreach(_.unpersist(false))
-    lastCheckpoint.foreach(_.unpersist(false))
     (merges.toList,
       BpeTrainStats(merges.size, batchSizes.size, sparkJobs,
         if (batchSizes.isEmpty) 0 else batchSizes.max, truncations, pairPeak))
@@ -1251,18 +1210,15 @@ object LmOps {
       s"delta must sit in [0, minCount): got delta=$delta minCount=$minCount")
     val spark = docs.sparkSession
     import spark.implicits._
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val c2 = docs.select(explode(TextFunctions.shinglesFromTokens(
         TextFunctions.tokens(col(textCol)), 2)).as("g"))
       .filter(size(TextFunctions.tokens(col("g"))) === 2)
       .select(split(col("g"), " ").getItem(0).as("prev"),
         split(col("g"), " ").getItem(1).as("cur"))
       .groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("c2"))
-      .persist(mem)
     val c1 = docs
       .select(explode(TextFunctions.tokens(col(textCol))).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("c1"))
-      .persist(mem)
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val plan = c2.filter(col("c2") >= minCount)
       .join(c1.select(col("t").as("prev"), col("c1").as("c1a"))
@@ -1285,9 +1241,9 @@ object LmOps {
           .cast("long").as("pmi_bit"))
       .orderBy(col("score_milli").desc, col("prev").asc, col("cur").asc)
       .limit(topN)
-    val rows =
-      try plan.collect()
-      finally { c2.unpersist(false); c1.unpersist(false) }
+    val rows = Materialize.scope { s =>
+      s.keep(c2); s.keep(c1); plan.collect()
+    }
     rows.map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
         r.getLong(7), r.getLong(8))).toSeq

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -71,22 +69,6 @@ object MetricsAggregations {
   def aggregateMetricsBy(metrics: DataFrame, keys: Column*): DataFrame =
     deriveRatios(metrics.groupBy(keys: _*).agg(sums.head, sums.tail: _*))
 
-  /** A2: explicit job set, rows with recordsProcessed>0
-    * (reference: src/job_monitor_service.cpp:477-489). */
-  def aggregateByJobIds(metrics: DataFrame, jobIds: Seq[String]): DataFrame =
-    aggregateMetrics(metrics.filter(
-      col("jobId").isin(jobIds: _*) && col("recordsProcessed") > 0))
-
-  /** A3: by job type (reference: src/job_monitor_service.cpp:491-512). */
-  def aggregateByType(metrics: DataFrame, jobType: String): DataFrame =
-    aggregateMetrics(metrics.filter(
-      col("jobType") === jobType && col("recordsProcessed") > 0))
-
-  /** A4: by time range (reference: src/job_monitor_service.cpp:514-538). */
-  def aggregateByTimeRange(metrics: DataFrame, start: Timestamp, end: Timestamp): DataFrame =
-    aggregateMetrics(metrics.filter(
-      col("startTime").between(lit(start), lit(end)) && col("recordsProcessed") > 0))
-
   /** A5: avg processing rate, optional type filter, empty→0.0
     * (reference: src/job_monitor_service.cpp:540-572). */
   def avgProcessingRate(metrics: DataFrame, jobType: Option[String] = None): DataFrame = {
@@ -104,48 +86,6 @@ object MetricsAggregations {
       avg(when(col("recordsProcessed") > 0, col("errorRate"))), lit(0.0))
       .as("avgErrorRate"))
   }
-
-  /** A7: best/worst elementwise benchmarks
-    * (reference: src/job_monitor_service.cpp:608-665). */
-  def performanceBenchmarks(metrics: DataFrame): DataFrame =
-    metrics.agg(
-      min(when(col("processingRate") > 0, col("processingRate"))).as("worst_rate"),
-      max(col("processingRate")).as("best_rate"),
-      max(col("errorRate")).as("worst_errorRate"),
-      min(col("errorRate")).as("best_errorRate"),
-      min(when(col("memoryEfficiency") > 0, col("memoryEfficiency"))).as("worst_memEff"),
-      max(col("memoryEfficiency")).as("best_memEff"))
-
-  /** A8: resource snapshot over active jobs with mem>0 or cpu>0
-    * (reference: src/job_monitor_service.cpp:688-727). */
-  def resourceUtilization(activeMetrics: DataFrame): DataFrame =
-    activeMetrics
-      .filter(col("memoryUsage") > 0 || col("cpuUsage") > 0)
-      .agg(
-        avg(col("memoryUsage") / (1024.0 * 1024.0)).as("avgMemoryMb"),
-        avg(col("cpuUsage")).as("avgCpu"),
-        max(col("peakMemoryUsage") / (1024.0 * 1024.0)).as("peakMemoryMb"),
-        max(col("peakCpuUsage")).as("peakCpu"),
-        count(lit(1)).as("activeJobs"))
-
-  /** A9: per-job history cap — keep newest N snapshots per job
-    * (reference: src/job_monitor_service.cpp:667-686, cap 1000). */
-  def capHistory(history: DataFrame, maxPerJob: Int = 1000): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("jobId")).orderBy(col("ts").desc)
-    history.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= maxPerJob).drop("_rn")
-  }
-
-  /** A9 retention: drop snapshots older than the window
-    * (reference: include/job_monitor_service.hpp:159, 24 h). */
-  def applyRetention(history: DataFrame, cutoff: Timestamp): DataFrame =
-    history.filter(col("ts") >= lit(cutoff))
-
-  /** A10: per-job history since a point in time
-    * (reference: src/job_monitor_service.cpp:456-475). */
-  def historySince(history: DataFrame, jobId: String, since: Timestamp): DataFrame =
-    history.filter(col("jobId") === jobId && col("ts") >= lit(since))
 
   /** A12: status counts as one row (reference: src/request_handler.cpp:1345-1352
     * declared shape {totalJobs, runningJobs, completedJobs, failedJobs}). */

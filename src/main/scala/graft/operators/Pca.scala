@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.core.Materialize
 
 /** Deterministic principal components of an embedding corpus — the
   * decorrelation/whitening preprocessing step ANN quantizers want (PQ
@@ -164,7 +165,10 @@ object Pca {
   private def quantized(corpus: DataFrame, idCol: String,
       vecCol: String): DataFrame =
     corpus.select(col(idCol).as("id"), quantize(col(vecCol)).as("qa"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** [[scatterOf]] with `q` kept across its actions. */
+  private def keptScatterOf(q: DataFrame): Scatter =
+    Materialize.scope { s => scatterOf(s.keep(q)) }
 
   /** One batch's moment summary as MERGEABLE cells — the streaming-
     * maintenance currency: (kind, i, j, v) rows where kind 's2' holds
@@ -320,9 +324,7 @@ object Pca {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val q = quantized(corpus, idCol, vecCol)
-    val sc = scatterOf(q)
-    q.unpersist(false)
+    val sc = keptScatterOf(quantized(corpus, idCol, vecCol))
     val (x, eig) = powerIterate(sc.m, sc.dim, iters)
     x.zipWithIndex.map { case (c, pos) => (pos.toLong, c, eig) }
       .toSeq.toDF("pos", "pc", "eigval")
@@ -338,9 +340,9 @@ object Pca {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
     val q = quantized(corpus, idCol, vecCol)
-    val sc = scatterOf(q)
-    q.unpersist(false) // actions done; the one projection pass recomputes
-    projectionPass(q, sc, k, iters)
+    // q is kept only for the scatter's actions; the one projection pass
+    // recomputes it
+    projectionPass(q, keptScatterOf(q), k, iters)
   }
 
   /** [[project]] served from an accumulated moment store: components

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 
 /** Product quantization (Jégou et al. 2011): split each vector into
   * `m` contiguous subvectors and learn an independent `k`-codeword
@@ -48,12 +49,12 @@ object Pq {
     * one meanPool shuffle of corpus×dim exploded rows. */
   def train(corpus: DataFrame, m: Int, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      iters: Int = TrainIters)(implicit spark: SparkSession): PqModel = {
+      iters: Int = TrainIters)(implicit spark: SparkSession): PqModel =
+      Materialize.scope { mat =>
     require(k >= 2 && k <= 256,
       s"k=$k outside [2, 256] — codes are stored as one unsigned byte " +
         "per subspace (read back with & 0xFF)")
-    val base = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = mat.keep(corpus.select(col(idCol).as("id"), col(vecCol).as("v")))
     val dim = base.select(size(col("v"))).head().getInt(0)
     require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
     val dsub = dim / m
@@ -69,11 +70,10 @@ object Pq {
       s"PQ corpus contains ${stats.getLong(1)} invalid vector(s) " +
         s"(null element or dimension mismatch vs dim=$dim) — clean the " +
         "corpus before training")
-    val exploded = base.select(col("id"),
+    val exploded = mat.keep(base.select(col("id"),
       explode(array((0 until m).map(s => struct(lit(s).as("sub"),
         slice(col("v"), s * dsub + 1, dsub).as("sv"))): _*)).as("e"))
-      .select(col("id"), col("e.sub").as("sub"), col("e.sv").as("sv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), col("e.sub").as("sub"), col("e.sv").as("sv")))
     // INIT: one window job ranks every subspace's sample stream
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("sub"))
@@ -114,8 +114,6 @@ object Pq {
         s += 1
       }
     }
-    exploded.unpersist(false)
-    base.unpersist(false)
     PqModel(m, k, dim, cbs)
   }
 
@@ -283,7 +281,6 @@ object Pq {
       .withColumn("crank", row_number().over(probeW))
       .filter(col("crank") <= nprobe)
       .select(col("query_id"), col("list_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // bounded collects — probe batch × nprobe pairs, nlist centroids
     val qvs: Map[Long, Array[Double]] = q.collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
@@ -296,10 +293,8 @@ object Pq {
     val pairs: Seq[(Long, Long)] = probes
       .select(col("query_id"), col("list_id").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    // release after the last driver action: the returned plan recomputes
-    // the (probe-batch × nprobe) probe derivation once — trivially cheap
-    // next to pinning a cache entry per call for the application lifetime
-    probes.unpersist(false)
+    // one driver action reads probes; the returned plan recomputes the
+    // (probe-batch × nprobe) probe derivation once — trivially cheap
     val dsub = model.dim / model.m
     val tables: Map[Long, Seq[Seq[Double]]] = pairs.map { case (qid, lid) =>
       val qv = qvs(qid)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
+import graft.core.Materialize
 
 /** Approximate analytics for when exact is unaffordable at 100 TB:
   * count-min frequency sketches, HyperLogLog distinct estimates, and
@@ -153,15 +154,15 @@ object Sketches {
     val toks = docs.select(explode(
       graft.functions.TextFunctions.tokens(col(textCol))).as("t"))
     // one counts aggregation serves BOTH the top-k collect and N (the
-    // eps·N over-count bound): persisted so the corpus is tokenized once
-    // for the exact side; the sketch pass is the second (and only other)
+    // eps·N over-count bound): kept so the corpus is tokenized once for
+    // the exact side; the sketch pass is the second (and only other)
     // corpus pass
-    val counts = toks.groupBy(col("t")).agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val top = counts.orderBy(col("n").desc, col("t").asc).limit(k)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val totalN = counts.agg(sum(col("n"))).collect()(0).getLong(0).max(1L)
-    counts.unpersist(false)
+    val (top, totalN) = Materialize.scope { s =>
+      val counts = s.keep(toks.groupBy(col("t")).agg(count(lit(1)).as("n")))
+      (counts.orderBy(col("n").desc, col("t").asc).limit(k)
+        .collect().map(r => (r.getString(0), r.getLong(1))),
+        counts.agg(sum(col("n"))).collect()(0).getLong(0).max(1L))
+    }
     val sketch = countMinSketch(toks, "t", eps, confidence)
     val checked = top.map { case (tok, exact) =>
       val est = sketch.estimateCount(tok)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{Materialize, QueryDef, Tables}
 import graft.functions.TextFunctions
 import graft.operators.CorpusOps
 
@@ -148,16 +148,17 @@ object CorpusQueries {
       val p = java.nio.file.Files.createTempDirectory("graft-benchfix").toString
       val bench = Tables(s, dir).documents
         .filter(col("doc_id") % 30 === 0).select(col("doc_id"), col("text"))
-      val grams = CorpusOps.benchGramTable(bench, n = 8, maxDf = Some(20))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      grams.write.mode("overwrite").parquet(s"$p/grams")
-      // bloom keyed on one-pass WINDOW hashes of the exact capped gram
-      // strings (tiny side), so the corpus probe never builds a gram
-      // string; same kernel both sides => no false negatives
-      graft.sources.BloomStore.write(s,
-        CorpusOps.benchWindowBloomBytes(grams, n = 8, fpp = 0.03),
-        s"$p/bench.bloom")
-      grams.unpersist(false)
+      Materialize.scope { m =>
+        val grams = m.keep(
+          CorpusOps.benchGramTable(bench, n = 8, maxDf = Some(20)))
+        grams.write.mode("overwrite").parquet(s"$p/grams")
+        // bloom keyed on one-pass WINDOW hashes of the exact capped gram
+        // strings (tiny side), so the corpus probe never builds a gram
+        // string; same kernel both sides => no false negatives
+        graft.sources.BloomStore.write(s,
+          CorpusOps.benchWindowBloomBytes(grams, n = 8, fpp = 0.03),
+          s"$p/bench.bloom")
+      }
       p
     })
     (graft.sources.BloomStore.read(s, s"$base/bench.bloom"),
@@ -533,7 +534,6 @@ object CorpusQueries {
          |       CAST(n_tokens AS BIGINT) AS n_tokens
          |FROM cum WHERE c <= budget ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val t = Tables(s, dir)
       val d = t.documents.select(col("doc_id"), col("text"), col("source"))
       // planted ids at 2^40/2^41: collision-clean headroom at ANY
@@ -554,26 +554,22 @@ object CorpusQueries {
         .select(col("doc_id"), col("n_tokens")), Seq("doc_id"))
       val wd = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
       // s2 feeds the minhash pipeline, the keep-best scores, the
-      // survivor rejoin, AND the decon gram explode — persist so the
-      // gate + window run once; the entry outlives the query build and
-      // stays until the runner's `clearCache` (Bench and Verify clear
-      // between queries)
-      val s2 = s1
+      // survivor rejoin, AND the decon gram explode — detach it so the
+      // gate + window run once
+      val s2 = Materialize.detached(s1
         .withColumn("fp",
           md5(regexp_replace(lower(col("text")), "\\s+", " ")))
         .withColumn("rn", row_number().over(wd))
-        .filter(col("rn") === 1).drop("fp", "rn")
-        .persist(mem)
+        .filter(col("rn") === 1).drop("fp", "rn"))
       // stage 3: the q205 doctrine inline — signatures once, banded
       // candidates under the combined hot cap, exact verify, components,
       // keep-best by token count (the longer near-twin wins). mh is
-      // persisted (the minhashNearDupPairs contract): the band join's
+      // detached (the minhashNearDupPairs contract): the band join's
       // two sides, the hot-bucket agg, and the two shingle join-backs
       // otherwise each re-run the 12-hash signature kernel over s2.
-      val mh = graft.operators.Dedup.minhashed(
+      val mh = Materialize.detached(graft.operators.Dedup.minhashed(
         s2.select(col("doc_id"), col("text")), "doc_id", "text",
-        shingleSize = 3, numHashes = 12, rowsPerBand = 3)
-        .persist(mem)
+        shingleSize = 3, numHashes = 12, rowsPerBand = 3))
       val pairs = graft.operators.Dedup.nearDupPairsFromMinhashed(
         mh, threshold = 0.5, maxBucketSize = Some(100))
         .select(col("id_a"), col("id_b"))
@@ -1892,9 +1888,9 @@ object CorpusQueries {
   /** Build-once-per-(session, sf) as-of fixture: batch b holds docs
     * with doc_id ≡ b (mod 3), three appends, NO compaction (as-of is
     * delta-granular; the compaction fold-point contract is spec'd in
-    * FingerprintStoreSpec). Returns the batch1 snapshot, persisted and
+    * FingerprintStoreSpec). Returns the batch1 snapshot, detached and
     * MEMOIZED alongside the store — re-executions of q188 reuse the
-    * one cache entry instead of stacking a new persist per call. */
+    * one set of blocks instead of stacking a new copy per call. */
   private def asofPost(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
     asofPostCache.computeIfAbsent(
@@ -1908,8 +1904,8 @@ object CorpusQueries {
             graft.operators.Retrieval.postings(
               docs.filter(col("doc_id") % 3 === b)), d, s"batch$b")
         }
-        graft.sources.PostingsStore.loadAsOf(s, d, "batch1")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Materialize.detached(
+          graft.sources.PostingsStore.loadAsOf(s, d, "batch1"))
       })
 
   // BM25F knobs — title length and integer title weight

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{Materialize, QueryDef, Tables}
 import graft.operators.LmOps
 
 /** LM-flavored corpus operators as oracle-verified queries: unigram
@@ -18,6 +18,13 @@ object LmQueries {
   private val ToksSql = OracleSql.Toks
   private val Grams2Sql = OracleSql.grams(2)
   private def fnvBucketSql(s: String): String = OracleSql.fnvBucket(s)
+
+  /** `f` over the corpus word histogram, kept while `f` runs. */
+  private def withHistogram[T](s: SparkSession, dir: String)(
+      f: org.apache.spark.sql.DataFrame => T): T =
+    Materialize.scope { m =>
+      f(m.keep(LmOps.wordHistogram(Tables(s, dir).documents)))
+    }
 
   /** Placeholder in q129's oracle SQL for the BPE witness fixture root —
     * Verify substitutes the per-(session, sf) path the same way it
@@ -796,10 +803,10 @@ object LmQueries {
          |FROM read_parquet('$BpeFixtureToken/encode/*.parquet')
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       ensureBpeFixture(s, dir)
-      val hist = LmOps.wordHistogram(Tables(s, dir).documents).persist()
-      val merges = LmOps.bpeTrainFast(hist, LmQueries.BpeMaxMerges)._1
-      val vocab = LmOps.bpeVocabIds(LmOps.bpeAlphabet(hist), merges)
-      hist.unpersist(false)
+      val (merges, vocab) = withHistogram(s, dir) { hist =>
+        val merges = LmOps.bpeTrainFast(hist, LmQueries.BpeMaxMerges)._1
+        (merges, LmOps.bpeVocabIds(LmOps.bpeAlphabet(hist), merges))
+      }
       LmOps.bpeEncodeReport(Tables(s, dir).documents,
         merges.map(m => (m.a, m.b)), vocab)
         .orderBy(col("doc_id"))
@@ -820,9 +827,8 @@ object LmQueries {
          |FROM read_parquet('$BpeFixtureToken/unigram_vocab/*.parquet')
          |ORDER BY piece_id""".stripMargin) { (s, dir) =>
       ensureUnigramFixture(s, dir)
-      val hist = LmOps.wordHistogram(Tables(s, dir).documents).persist()
-      val (pieces, _) = graft.operators.UnigramLm.train(hist)
-      hist.unpersist(false)
+      val (pieces, _) =
+        withHistogram(s, dir)(graft.operators.UnigramLm.train(_))
       graft.operators.UnigramLm.piecesToDf(s, pieces)
         .orderBy(col("piece_id"))
     },
@@ -842,9 +848,8 @@ object LmQueries {
          |FROM read_parquet('$BpeFixtureToken/unigram_encode/*.parquet')
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       ensureUnigramFixture(s, dir)
-      val hist = LmOps.wordHistogram(Tables(s, dir).documents).persist()
-      val (pieces, _) = graft.operators.UnigramLm.train(hist)
-      hist.unpersist(false)
+      val (pieces, _) =
+        withHistogram(s, dir)(graft.operators.UnigramLm.train(_))
       graft.operators.UnigramLm.encodeReport(Tables(s, dir).documents, pieces)
         .orderBy(col("doc_id"))
     },
@@ -903,10 +908,10 @@ object LmQueries {
          |FROM read_parquet('$BpeFixtureToken/wp_from_trained/*.parquet')
          |ORDER BY piece_id""".stripMargin) { (s, dir) =>
       ensureUnigramFixture(s, dir)
-      val hist = LmOps.wordHistogram(Tables(s, dir).documents).persist()
-      val (pieces, _) = graft.operators.UnigramLm.train(hist)
-      val vocab = graft.operators.WordPiece.fromTrained(hist, pieces)
-      hist.unpersist(false)
+      val vocab = withHistogram(s, dir) { hist =>
+        graft.operators.WordPiece.fromTrained(hist,
+          graft.operators.UnigramLm.train(hist)._1)
+      }
       graft.operators.WordPiece.vocabToDf(s, vocab)
         .orderBy(col("piece_id"))
     },
@@ -926,10 +931,10 @@ object LmQueries {
          |FROM read_parquet('$BpeFixtureToken/wp_from_trained_encode/*.parquet')
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       ensureUnigramFixture(s, dir)
-      val hist = LmOps.wordHistogram(Tables(s, dir).documents).persist()
-      val (pieces, _) = graft.operators.UnigramLm.train(hist)
-      val vocab = graft.operators.WordPiece.fromTrained(hist, pieces)
-      hist.unpersist(false)
+      val vocab = withHistogram(s, dir) { hist =>
+        graft.operators.WordPiece.fromTrained(hist,
+          graft.operators.UnigramLm.train(hist)._1)
+      }
       graft.operators.WordPiece.encodeReport(Tables(s, dir).documents, vocab)
         .orderBy(col("doc_id"))
     },
@@ -964,11 +969,10 @@ object LmQueries {
       ensureUnigramFixture(s, dir)
       ensureWordPieceFixture(s, dir)
       import graft.operators.{UnigramLm, WordPiece}
-      val hist = LmOps.wordHistogram(Tables(s, dir).documents).persist()
-      val rawVocab = WordPiece.deriveVocab(hist)
-      val (pieces, _) = UnigramLm.train(hist)
-      val trVocab = WordPiece.fromTrained(hist, pieces)
-      hist.unpersist(false)
+      val (rawVocab, trVocab) = withHistogram(s, dir) { hist =>
+        (WordPiece.deriveVocab(hist),
+          WordPiece.fromTrained(hist, UnigramLm.train(hist)._1))
+      }
       val rawIds = rawVocab.map(p => p.piece -> p.id).toMap
       val trIds = trVocab.map(p => p.piece -> p.id).toMap
       import graft.functions.TextFunctions
@@ -1032,10 +1036,9 @@ object LmQueries {
       ensureWordPieceFixture(s, dir)
       import graft.functions.TextFunctions
       import graft.operators.{UnigramLm, WordPiece}
-      val hist = LmOps.wordHistogram(Tables(s, dir).documents).persist()
-      val (uniPieces, _) = UnigramLm.train(hist)
-      val wpVocab = WordPiece.deriveVocab(hist)
-      hist.unpersist(false)
+      val (uniPieces, wpVocab) = withHistogram(s, dir) { hist =>
+        (UnigramLm.train(hist)._1, WordPiece.deriveVocab(hist))
+      }
       val uniCounts = uniPieces.map(p => p.piece -> p.count).toMap
       val uniN = math.max(1L, uniCounts.valuesIterator.sum)
       val uniCosts = uniCounts.map { case (p, c) =>
@@ -1130,10 +1133,10 @@ object LmQueries {
          |FROM old JOIN new USING (doc_id)
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       ensureBpeFixture(s, dir)
-      val hist = LmOps.wordHistogram(Tables(s, dir).documents).persist()
-      val merges = LmOps.bpeTrainFast(hist, LmQueries.BpeMaxMerges)._1
-      val alpha = LmOps.bpeAlphabet(hist)
-      hist.unpersist(false)
+      val (merges, alpha) = withHistogram(s, dir) { hist =>
+        (LmOps.bpeTrainFast(hist, LmQueries.BpeMaxMerges)._1,
+          LmOps.bpeAlphabet(hist))
+      }
       val base = merges.take(UpgradeBaseMerges)
       val docs = Tables(s, dir).documents
       val old = LmOps.bpeEncodeReport(docs, base.map(m => (m.a, m.b)),

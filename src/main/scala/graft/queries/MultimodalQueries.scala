@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{Materialize, QueryDef, Tables}
 import graft.operators.Multimodal
 
 /** Oracle-verified exercise of the multimodal plumbing: the payload is a
@@ -178,8 +178,7 @@ object MultimodalQueries {
          |FROM comp GROUP BY comp HAVING count(*) > 1
          |ORDER BY canonical_id""".stripMargin
     }) { (s, dir) =>
-      val hashes = imageHashes(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hashes = Materialize.detached(imageHashes(s, dir))
       val pairs = graft.operators.Dedup.hammingNearDupPairs(hashes,
         bits = 64, bands = 4, maxDist = 3)
         .select(col("id_a"), col("id_b"))
@@ -309,12 +308,11 @@ object MultimodalQueries {
          |FROM comp GROUP BY comp HAVING count(*) > 1
          |ORDER BY canonical_id""".stripMargin
     }) { (s, dir) =>
-      // ONE persisted posting table feeds both the node list and the
+      // ONE detached posting table feeds both the node list and the
       // pair derivation — calling videoNearDupPairs here would rebuild
-      // (and re-persist) the whole frame-sample + grid + hash pipeline
+      // (and re-detach) the whole frame-sample + grid + hash pipeline
       // a second time for the same data
-      val hs = videoFrameHashes(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hs = Materialize.detached(videoFrameHashes(s, dir))
       val pairs = graft.operators.Dedup.frameSetNearDupPairs(hs, tMilli = 500)
         .select(col("id_a"), col("id_b"))
       graft.operators.Dedup.connectedComponents(
@@ -370,8 +368,7 @@ object MultimodalQueries {
          |FROM p WHERE 1000 * inter >= 500 * un
          |ORDER BY new_id, store_id""".stripMargin
     }) { (s, dir) =>
-      val hs = videoFrameHashes(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hs = Materialize.detached(videoFrameHashes(s, dir))
       val store = hs.filter(col("id") >= 0 && col("id") % 2 === 0)
       val batch = hs.filter((col("id") >= 0 && col("id") % 2 === 1) ||
         (col("id") < 0 && (-col("id") - 1) % 2 === 0))
@@ -448,12 +445,11 @@ object MultimodalQueries {
       // EVERY video — the static-intro-frame skew
       val univ = hs.select(col("id")).distinct()
         .withColumn("fhash", lit(-1L))
-      val p = hs.unionByName(univ)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val p = Materialize.detached(hs.unionByName(univ))
       // ONE hot set feeds both the operator and the accounting rows —
       // computed once, no cap drift possible between the two
-      val hot = graft.operators.Dedup.hotFrameHashes(p, cap = 100)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hot = Materialize.detached(
+        graft.operators.Dedup.hotFrameHashes(p, cap = 100))
       val pairs = graft.operators.Dedup.frameSetNearDupPairs(p,
         tMilli = 500, hotFrameKeys = Some(hot))
       pairs.select(lit("pair").as("kind"),
@@ -546,8 +542,7 @@ object MultimodalQueries {
          |FROM comp GROUP BY comp HAVING count(*) > 1
          |ORDER BY canonical_id""".stripMargin
     }) { (s, dir) =>
-      val hashes = audioFingerprints(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hashes = Materialize.detached(audioFingerprints(s, dir))
       val pairs = graft.operators.Dedup.hammingNearDupPairs(hashes,
         bits = 64, bands = 4, maxDist = 3)
         .select(col("id_a"), col("id_b"))
@@ -675,17 +670,17 @@ object MultimodalQueries {
          |            ELSE 'train' END AS split
          |FROM comp ORDER BY id""".stripMargin
     }) { (s, dir) =>
-      val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val v = Tables(s, dir).documents.filter(col("doc_id") % 3 === 2)
         .select(col("doc_id").as("id"), col("text"))
       // entities: base / re-captioned frame variant / same-caption twin
-      val captions = v.select(col("id"), col("text").as("caption"))
-        .unionByName(v.filter(col("id") % 5 === 0)
-          .select((-col("id") - 1).as("id"),
-            concat(col("text"), lit(" v2")).as("caption")))
-        .unionByName(v.filter(col("id") % 5 === 0)
-          .select((col("id") + (1L << 40)).as("id"), col("text").as("caption")))
-        .persist(mem)
+      val captions = Materialize.detached(
+        v.select(col("id"), col("text").as("caption"))
+          .unionByName(v.filter(col("id") % 5 === 0)
+            .select((-col("id") - 1).as("id"),
+              concat(col("text"), lit(" v2")).as("caption")))
+          .unionByName(v.filter(col("id") % 5 === 0)
+            .select((col("id") + (1L << 40)).as("id"),
+              col("text").as("caption"))))
       // caption EXACT edges as star edges to the cluster min id — same
       // closure as all-pairs at O(cluster) instead of O(cluster²) rows
       val cfp = captions.select(col("id"),
@@ -708,8 +703,8 @@ object MultimodalQueries {
       val twinPostings = tframes.select(col("id"),
         graft.functions.ImageHash.dHashGrid(
           Multimodal.fakeLumaGrid(unhex(thx)), 7, 4).as("fhash"))
-      val postings = videoFrameHashes(s, dir).unionByName(twinPostings)
-        .persist(mem)
+      val postings = Materialize.detached(
+        videoFrameHashes(s, dir).unionByName(twinPostings))
       val frameEdges = graft.operators.Dedup
         .frameSetNearDupPairs(postings, tMilli = 500)
         .select(col("id_a"), col("id_b"))
@@ -788,15 +783,12 @@ object MultimodalQueries {
 
   /** The q220 pair derivation: [[graft.operators.Dedup
     * .frameSetNearDupPairs]] over the fixture postings at the 500-milli
-    * threshold. Postings persist so the frame-sample + grid + hash
-    * pipeline runs once across the operator's joins; the entry outlives
-    * the query build and stays until the runner's `clearCache`. */
+    * threshold. Postings are detached so the frame-sample + grid + hash
+    * pipeline runs once across the operator's joins. */
   private def videoNearDupPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     graft.operators.Dedup.frameSetNearDupPairs(
-      videoFrameHashes(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      tMilli = 500)
+      Materialize.detached(videoFrameHashes(s, dir)), tMilli = 500)
 
   /** Audio fixture geometry: 17 windows × 4 bands → a FULL 64-bit
     * fingerprint ((17−1)·4 comparisons). Widened from the original

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{Materialize, QueryDef, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Similarity}
 
@@ -607,13 +607,12 @@ object PipelineQueries {
          |       ELSE 0.0 END AS jaccard
          |FROM sh a JOIN sh b ON b.id = a.id + 1
          |ORDER BY id_a""".stripMargin) { (s, dir) =>
-      // persist: both join sides read the same per-doc shingle table —
+      // detached: both join sides read the same per-doc shingle table —
       // without it the shingling expression tree evaluates twice per doc
-      val sh = Tables(s, dir).documents.select(
+      val sh = Materialize.detached(Tables(s, dir).documents.select(
         col("doc_id").as("id"),
         graft.functions.ShingleExpressions
-          .wordShinglesDistinct(col("text"), 3).as("shingles"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .wordShinglesDistinct(col("text"), 3).as("shingles")))
       val a = sh.select(col("id").as("id_a"), col("shingles").as("sh_a"))
       val b = sh.select(col("id").as("id_b"), col("shingles").as("sh_b"))
       a.join(b, col("id_b") === col("id_a") + 1)
@@ -889,14 +888,13 @@ object PipelineQueries {
          |WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
          |    / CAST(len(list_distinct(list_concat(sh_a, sh_b))) AS DOUBLE) >= 0.6
          |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
-      val mh = dupDocs(Tables(s, dir)).select(
+      val mh = Materialize.detached(dupDocs(Tables(s, dir)).select(
         col("doc_id").as("id"),
         graft.functions.ShingleExpressions
           .charShinglesDistinct(col("text"), 5).as("shingles"))
         .withColumn("signature",
           graft.functions.HashExpressions.minhashSignature(col("shingles"), 8))
-        .withColumn("band_keys", TextFunctions.lshBandKeys(col("signature"), 4))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumn("band_keys", TextFunctions.lshBandKeys(col("signature"), 4)))
       // same hot-bucket guardrail as q28 (cap ≫ sf0.1 bucket sizes →
       // oracle-identical results, quadratic-bucket protection live)
       Dedup.lshCandidatePairs(mh, maxBucketSize = Some(100))

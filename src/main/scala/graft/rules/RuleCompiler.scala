@@ -97,8 +97,4 @@ object RuleCompiler {
     val bad = withErrs.filter(size(col("_validation_errors")) > 0)
     (good, bad)
   }
-
-  /** Registry ops (reference: src/data_transformer.cpp:28-43). */
-  def removeBySourceField(rules: Seq[TransformationRule], sourceField: String)
-      : Seq[TransformationRule] = rules.filterNot(_.sourceField == sourceField)
 }

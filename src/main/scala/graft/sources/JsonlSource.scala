@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Materialize
+
 /** JSON-lines corpus ingestion with corrupt-record quarantine — the
   * standard interchange format of LLM training corpora, read the way a
   * 100 TB pipeline must: PERMISSIVE parse (one bad line must not kill a
@@ -28,20 +30,19 @@ object JsonlSource {
 
   /** (good rows with `schema`, quarantined raw lines).
     *
-    * The parsed frame is persisted before the split: Spark refuses a
+    * The parsed frame is detached before the split: Spark refuses a
     * query whose pruned read schema is ONLY the corrupt column (the
-    * quarantine side would be exactly that), and the persist also makes
+    * quarantine side would be exactly that), and detaching also makes
     * good + quarantine ONE scan instead of two. At 100 TB the same
     * shape applies with the materialization as a parquet write
     * (parse once, split from the parsed copy) rather than a cache. */
   def read(spark: SparkSession, path: String, schema: StructType)
       : (DataFrame, DataFrame) = {
-    val raw = spark.read
+    val raw = Materialize.detached(spark.read
       .schema(schema.add(CorruptCol, "string"))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .json(path))
     val good = raw.filter(col(CorruptCol).isNull).drop(CorruptCol)
     val quarantined = raw.filter(col(CorruptCol).isNotNull)
       .select(col(CorruptCol).as("raw_line"))
@@ -62,7 +63,7 @@ object JsonlSource {
 
 /** CSV twin of [[JsonlSource]]: same permissive-parse + verbatim
   * quarantine contract for delimited corpora (malformed rows land in
-  * the corrupt column as the raw line; the split runs off one persisted
+  * the corrupt column as the raw line; the split runs off one detached
   * scan for the same two reasons). Spark's CSV reader quarantines rows
   * with the wrong column count or unconvertible values. */
 object CsvSource {
@@ -70,14 +71,13 @@ object CsvSource {
   /** (good rows with `schema`, quarantined raw lines). */
   def read(spark: SparkSession, path: String, schema: StructType,
       header: Boolean = false, delimiter: String = ","): (DataFrame, DataFrame) = {
-    val raw = spark.read
+    val raw = Materialize.detached(spark.read
       .schema(schema.add(JsonlSource.CorruptCol, "string"))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", JsonlSource.CorruptCol)
       .option("header", header.toString)
       .option("sep", delimiter)
-      .csv(path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .csv(path))
     val good = raw.filter(col(JsonlSource.CorruptCol).isNull)
       .drop(JsonlSource.CorruptCol)
     val quarantined = raw.filter(col(JsonlSource.CorruptCol).isNotNull)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
+import graft.core.Materialize
 import graft.operators.LogQuery
 
 /** ST2/S8: multi-destination batched log shipping — the aggregator's
@@ -365,11 +366,11 @@ object LogShipper {
     * `sleeper` is injectable so specs verify backoff without sleeping. */
   def shipBatch(batch: DataFrame, batchId: Long,
       destinations: Seq[(Destination, Writer)],
-      sleeper: Long => Unit = Thread.sleep): Unit = {
-    // one pass per destination over the (small) micro-batch; cache so the
-    // per-destination filters don't re-read the source
-    batch.persist()
-    try destinations.foreach { case (dest, writer) =>
+      sleeper: Long => Unit = Thread.sleep): Unit = Materialize.scope { m =>
+    // one pass per destination over the (small) micro-batch; keep it so
+    // the per-destination filters don't re-read the source
+    m.keep(batch)
+    destinations.foreach { case (dest, writer) =>
       val filtered = LogQuery.shipFilter(batch, dest.allowedLevels, dest.allowedComponents)
       val n = filtered.count()
       // cap each sleep by the remaining inline budget; attempts whose
@@ -391,7 +392,7 @@ object LogShipper {
         shipped = shipped :+ ShipResult(dest.name, batchId, if (ok) n else 0L,
           delivered = ok, attempts = outcome.attempts)
       }
-    } finally batch.unpersist()
+    }
   }
 
   /** Attach the shipper to a streaming log Dataset with the reference's

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.operators.Dedup
 
 /** ONE streamed admission chain for a MIXED-modality ingest — the
@@ -49,45 +50,39 @@ object MultimodalAdmission {
     * batch-parity witnesses. Returns the admitted (modality, id) rows
     * (video collapsed to one row per admitted entity). */
   def ingest(batch: DataFrame, batchId: String, image: HammingCfg,
-      audio: HammingCfg, video: FrameCfg): DataFrame = {
-    val b = batch.select(col("modality"), col("id"), col("key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val img = b.filter(col("modality") === "image")
-        .select(col("id"), col("key").as("hash"))
-      val aud = b.filter(col("modality") === "audio")
-        .select(col("id"), col("key").as("hash"))
-      val vid = b.filter(col("modality") === "video")
-        .select(col("id"), col("key").as("fhash"))
-      val admittedImg = Dedup.imageAdmissionIngest(img, image.dir, batchId,
-        image.bits, image.bands, image.maxDist)
-        .select(lit("image").as("modality"), col("id"))
-      val admittedAud = Dedup.audioAdmissionIngest(aud, audio.dir, batchId,
-        audio.bits, audio.bands, audio.maxDist)
-        .select(lit("audio").as("modality"), col("id"))
-      val admittedVid = Dedup.videoAdmissionIngest(vid, video.dir, batchId,
-        video.tMilli)
-        .select(lit("video").as("modality"), col("id")).distinct()
-      // the folds have already appended their deltas (side effect);
-      // materialize the admitted union while the batch is still
-      // persisted, so the returned frame never recomputes the
-      // anti-joins against an unpersisted input. The cache entry
-      // outlives this call: the ContextCleaner never drops a persisted
-      // Dataset, so the caller must `unpersist` the returned frame (or
-      // `clearCache`) once it is consumed
-      val out = admittedImg.unionByName(admittedAud).unionByName(admittedVid)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      out
-    } finally { b.unpersist(); () }
+      audio: HammingCfg, video: FrameCfg): DataFrame = Materialize.scope { m =>
+    val b = m.keep(batch.select(col("modality"), col("id"), col("key")))
+    val img = b.filter(col("modality") === "image")
+      .select(col("id"), col("key").as("hash"))
+    val aud = b.filter(col("modality") === "audio")
+      .select(col("id"), col("key").as("hash"))
+    val vid = b.filter(col("modality") === "video")
+      .select(col("id"), col("key").as("fhash"))
+    val admittedImg = Dedup.imageAdmissionIngest(img, image.dir, batchId,
+      image.bits, image.bands, image.maxDist)
+      .select(lit("image").as("modality"), col("id"))
+    val admittedAud = Dedup.audioAdmissionIngest(aud, audio.dir, batchId,
+      audio.bits, audio.bands, audio.maxDist)
+      .select(lit("audio").as("modality"), col("id"))
+    val admittedVid = Dedup.videoAdmissionIngest(vid, video.dir, batchId,
+      video.tMilli)
+      .select(lit("video").as("modality"), col("id")).distinct()
+    // the folds have already appended their deltas (side effect);
+    // materialize the detached admitted union while the batch is
+    // still kept, so the returned frame never recomputes the
+    // anti-joins against a released input
+    val out = Materialize.detached(
+      admittedImg.unionByName(admittedAud).unionByName(admittedVid))
+    out.count()
+    out
   }
 
   /** foreachBatch sink over a (modality, id, key) stream. `onAdmitted`
     * observes each micro-batch's admitted (modality, id) rows (stats,
     * routing); default discards them — the stores are the durable
-    * output. The admitted frame is released once `onAdmitted` returns,
-    * so the callback must consume it (collect, write) rather than keep
-    * it for later. */
+    * output. The admitted frame is released once `onAdmitted`
+    * returns, so the callback must consume it (collect, write) rather
+    * than keep it for later. */
   def sink(image: HammingCfg, audio: HammingCfg, video: FrameCfg,
       onAdmitted: DataFrame => Unit = _ => ())
       : (Dataset[Row], Long) => Unit =
@@ -95,6 +90,6 @@ object MultimodalAdmission {
       if (!batch.isEmpty) {
         val admitted =
           ingest(batch.toDF(), f"b$batchId%09d", image, audio, video)
-        try onAdmitted(admitted) finally { admitted.unpersist(); () }
+        try onAdmitted(admitted) finally Materialize.release(admitted)
       }
 }

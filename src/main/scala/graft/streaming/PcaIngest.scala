@@ -67,18 +67,4 @@ object PcaIngest {
       rounded: Boolean = false): DataFrame =
     Pca.topComponentFromCells(MomentStore.loadAsOf(spark, dir, upToBatch),
       iters, rounded)
-
-  /** Top-k projection of `corpus` under the STORE's components — the
-    * serve form of [[graft.operators.Pca.project]]: model state comes
-    * from the accumulated cells (the historical corpus is never
-    * re-read), the projection pass touches only the rows the caller
-    * asks about (typically the newest batch, projected under the
-    * all-history components). Bit-equal to the batch build when
-    * `corpus` is the full ingested set; `rounded = true` past the
-    * exactness ceiling. */
-  def serveProjection(spark: SparkSession, dir: String, corpus: DataFrame,
-      k: Int = 2, iters: Int = Pca.Iters,
-      rounded: Boolean = false): DataFrame =
-    Pca.projectFromCells(MomentStore.load(spark, dir), corpus, k, iters,
-      rounded)
 }

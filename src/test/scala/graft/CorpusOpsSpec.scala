@@ -674,12 +674,8 @@ class CorpusOpsSpec extends AnyFunSuite {
     val nodes = (1L to 9L).toDF("id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L),
       (7L, 8L), (8L, 9L), (7L, 9L)).toDF("id_a", "id_b")
-    def kill(before: Set[Int]): Unit =
-      // drop every block this run created — cached DataFrames and
-      // checkpoint/persist blocks alike — the local-mode equivalent of
-      // losing the executors that held them
-      sc.getPersistentRDDs.filterNot { case (id, _) => before(id) }
-        .values.foreach(_.unpersist(blocking = true))
+    def kill(before: Set[Int]): Unit = BlockLoss.killSince(sc, before)
+    def entries = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
     // post-kill evaluations go through a FRESH execution: collect() on
     // the same Dataset would reuse its QueryExecution's already-
     // materialized AQE stages and never touch the killed blocks at all
@@ -690,9 +686,14 @@ class CorpusOpsSpec extends AnyFunSuite {
     // reliable mode: re-evaluating the plan after the kill must re-derive
     // odd rounds from their lineage, which bottoms out at the durable
     // checkpoint FILES on disk — identical components, no failure
-    val beforeReliable = sc.getPersistentRDDs.keySet.toSet
+    val beforeReliable = BlockLoss.persistedRdds(sc)
+    val entriesBefore = entries
     val comp = Dedup.connectedComponents(nodes, pairs,
       checkpointDir = Some(dir), checkpointEvery = 2, localFinishEdges = 0)
+    // neither mode leaves a CacheManager entry behind: intermediate and
+    // final rounds are detached or cut, the edge set is scoped
+    assert(entries == entriesBefore,
+      s"reliable CC left ${entries - entriesBefore} cache entries")
     val healthy = comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     kill(beforeReliable)
     assert(freshCollect(comp) == healthy, "components changed across recovery")
@@ -700,9 +701,11 @@ class CorpusOpsSpec extends AnyFunSuite {
     // sanity of the witness: the default localCheckpoint mode truncates
     // lineage, so the same kill makes re-evaluation IMPOSSIBLE — this is
     // exactly the unrecoverability the reliable mode exists to fix
-    val beforeLocal = sc.getPersistentRDDs.keySet.toSet
+    val beforeLocal = BlockLoss.persistedRdds(sc)
     val volatileComp = Dedup.connectedComponents(nodes, pairs,
       localFinishEdges = 0)
+    assert(entries == entriesBefore,
+      s"local CC left ${entries - entriesBefore} cache entries")
     assert(volatileComp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       == healthy)
     kill(beforeLocal)

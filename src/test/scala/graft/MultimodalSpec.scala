@@ -422,9 +422,13 @@ class MultimodalSpec extends AnyFunSuite {
     def entries = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
     val before = entries
     batches.zipWithIndex.foreach { case (rows, i) =>
+      val rddsBefore = BlockLoss.persistedRdds(spark.sparkContext)
       sink(rows.toDF("modality", "id", "key"), i.toLong)
       assert(entries == before,
         s"micro-batch $i left ${entries - before} cache entries")
+      // released when the sink returns, not whenever a GC runs
+      val held = BlockLoss.persistedRdds(spark.sparkContext) -- rddsBefore
+      assert(held.isEmpty, s"micro-batch $i left persisted RDDs $held")
     }
   }
 }

@@ -329,18 +329,41 @@ class PlanAuditSpec extends AnyFunSuite {
     // A new query that sneaks in an unpartitioned window or a
     // single-partition aggregation fails here by name, not in the
     // cluster bill. (CollectLimit/TakeOrdered are fine and distinct.)
-    val whitelist: Set[String] = Set()
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+    // The scan reads the physical plan's tree string, which prints
+    // "Exchange SinglePartition" and the plans of cached frames; the
+    // formatted explain puts "SinglePartition" on the node's Arguments
+    // line instead, where this search cannot see it.
+    // The same pass audits the materialization lifecycle: a build that
+    // leaves a CacheManager entry behind leaks it for the application's
+    // lifetime (nothing but a clearCache ever frees it). Each build
+    // starts from an empty cache: a persist of a plan some earlier build
+    // already leaked adds no entry, and would hide the second leak.
+    // Known offenders, listed for review in ROADMAP direction 4; each
+    // leaves the list once it is fixed or justified.
+    val whitelist: Set[String] = Set("q07_agg_time_range",
+      "q09_minmax_bench", "q182_nb_train", "q19_transform_rules",
+      "q212_cms_join_estimate", "q63_watermark_windows",
+      "q79_training_order", "q81_quality_funnel", "q98_key_skew")
+    def entries = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
+    val audited = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      spark.sharedState.cacheManager.clearCache()
+      val before = entries
       val plan =
-        try formatted(SparkEntry.queries(name)(spark, dir))
+        try SparkEntry.queries(name)(spark, dir).queryExecution
+          .executedPlan.toString
         catch { case scala.util.control.NonFatal(e) =>
           fail(s"$name failed to plan: ${e.getMessage}")
         }
-      if (plan.contains("Exchange SinglePartition")) Some(name) else None
+      (name, plan.contains("Exchange SinglePartition"), entries - before)
     }
+    val offenders = audited.collect { case (name, true, _) => name }
     assert(offenders.toSet.subsetOf(whitelist),
       s"SinglePartition exchanges outside whitelist: " +
         s"${offenders.filterNot(whitelist)}")
+    val leaks = audited.collect { case (name, _, n) if n > 0 => s"$name (+$n)" }
+    assert(leaks.isEmpty,
+      s"${leaks.size} query builds left CacheManager entries: " +
+        leaks.mkString(", "))
   }
 
   test("q178/q179: theta pairwise stages consume k-row-bounded frames") {
@@ -391,20 +414,33 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("q103: bloom prefilter sits between gram explode and the shuffle") {
     // The 100 TB claim of bloomContamination is that corpus grams are
-    // Bloom-filtered BEFORE they shuffle for the confirm join. In the
-    // executed plan (printed root-down) that is: ... Exchange ->
-    // Filter(might_contain) -> Generate(explode) -> scan, i.e. no
-    // Exchange may appear between the bloom predicate and the explode
-    // feeding it.
-    val plan = executed(query("q103_bloom_decontamination"))
-    val mcIdx = plan.indexOf("might_contain")
-    assert(mcIdx >= 0, "bloom predicate missing from the executed plan")
-    val below = plan.substring(mcIdx)
-    val genIdx = below.indexOf("Generate explode")
-    assert(genIdx >= 0, "gram explode not below the bloom filter")
-    assert(!below.substring(0, genIdx).contains("Exchange"),
+    // Bloom-filtered BEFORE they shuffle for the confirm join: the
+    // corpus gram explode reaches the Filter(might_contain) without
+    // crossing an Exchange (the filter is doc-level, so it sits below
+    // the explode, on the scan). Checked on the plan tree: a string
+    // search for the next "Generate explode" below the predicate
+    // matched the BENCH side's explode, printed inside the cached gram
+    // table's InMemoryRelation, not the corpus one.
+    import org.apache.spark.sql.execution.{FilterExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan = finalPlanTree(query("q103_bloom_decontamination"))
+    def isBloom(p: SparkPlan): Boolean = p match {
+      case f: FilterExec => f.condition.toString.contains("might_contain")
+      case _ => false
+    }
+    def reachesBloomPreShuffle(p: SparkPlan): Boolean = p match {
+      case _: Exchange | _: QueryStageExec => false
+      case _ => isBloom(p) || p.children.exists(reachesBloomPreShuffle)
+    }
+    assert(collectAll(plan) { case f if isBloom(f) => f }.nonEmpty,
+      s"bloom predicate missing from the executed plan:\n$plan")
+    val explodes = collectAll(plan) {
+      case g: GenerateExec if g.generator.toString.contains("explode") => g
+    }
+    assert(explodes.exists(_.children.exists(reachesBloomPreShuffle)),
       "an Exchange sits between the bloom filter and the gram explode — " +
-        "the prefilter is no longer pre-shuffle")
+        s"the prefilter is no longer pre-shuffle:\n$plan")
   }
 
   test("q138/q140: unigram encode and kmeans assignment are shuffle-free") {
