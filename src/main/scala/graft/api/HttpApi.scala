@@ -4,6 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.functions.{Jwt, MiniJson}
 import graft.model.ConnectionFilters
@@ -68,9 +69,17 @@ object HttpApi {
 
   /** Bind and start. `port` 0 picks an ephemeral port (tests); the
     * returned server reports it via `getAddress.getPort`. `jobs` and
-    * `logs` are the prepared frames the routes query — at scale these
-    * are registered views over the job store / log source, planned per
-    * request with the caller's filters pushed down. `users` (user_id,
+    * `logs` are the prepared frames the routes query, read as of bind:
+    * the server answers as if neither frame changes while it is bound.
+    * A parquet-path frame fixes its file listing when it is created and
+    * a local `Seq(...).toDF` frame never changes, so both meet this; to
+    * serve newer data, bind a new frame. The filtered routes (monitor
+    * jobs, log search, job hits) plan per request with the caller's
+    * filters pushed down. The job-status counts (monitor and health
+    * metrics) and a Bloom filter over the job ids are read once per
+    * bind, on first use, and shared by every request after it: an id
+    * the filter rules out answers from the scheduled-job buffer or 404
+    * without a Spark job. `users` (user_id,
     * username, password_hash, password_salt, is_active, optionally
     * email/created_at) backs the auth group; without it auth returns
     * 401 like the reference's ETL_ENABLE_JWT=off build. `rateRules`
@@ -148,12 +157,19 @@ object HttpApi {
         s""""etl_manager_running":$alive}""")
     }
 
+    // the jobs frame as of bind, read once by whichever request needs it
+    // first (the lazy val blocks concurrent first requests on one build)
+    lazy val snapshot = new JobsSnapshot(jobs)
+
     def jobCounts(): (Long, Long, Long, Long) = {
-      val counts = jobs.groupBy(lower(col("status")).as("s")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val counts = snapshot.counts
       (counts.valuesIterator.sum, counts.getOrElse("running", 0L),
         counts.getOrElse("completed", 0L), counts.getOrElse("failed", 0L))
     }
+
+    def jobRow(id: String): Option[Row] =
+      if (!snapshot.mayHold(id)) None
+      else jobs.filter(col("jobId") === lit(id)).limit(1).collect().headOption
 
     ctx("/api/monitor/metrics") { _ =>
       val (total, running, completed, failed) = jobCounts()
@@ -342,7 +358,7 @@ object HttpApi {
         case ("GET", p) if p.endsWith("/status") =>
           val id = p.stripSuffix("/status")
           if (!validJobId(id)) (400, errJson("Invalid job ID format"))
-          else jobRow(jobs, id) match {
+          else jobRow(id) match {
             case Some(r) => (200, jobStatusJson(r, clock()))
             case None => scheduledJob(id) match {
               case Some((_, st, tpe)) =>
@@ -353,7 +369,7 @@ object HttpApi {
         case ("GET", p) if p.endsWith("/metrics") =>
           val id = p.stripSuffix("/metrics")
           if (!validJobId(id)) (400, errJson("Invalid job ID format"))
-          else jobRow(jobs, id) match {
+          else jobRow(id) match {
             case Some(r) => (200, jobMetricsJson(r, clock()))
             case None => scheduledJob(id) match {
               case Some((_, st, _)) =>
@@ -363,7 +379,7 @@ object HttpApi {
           }
         case ("PUT", id) if id.nonEmpty && !id.contains("/") =>
           if (!validJobId(id)) (400, errJson("Invalid job ID format"))
-          else if (jobRow(jobs, id).isEmpty && scheduledJob(id).isEmpty)
+          else if (jobRow(id).isEmpty && scheduledJob(id).isEmpty)
             (404, errJson("Job not found"))
           else {
             // reference (input_validator.cpp:284-299): at least one of
@@ -579,8 +595,31 @@ object HttpApi {
       s""""is_active":$active,"created_at":${quote(created)}}"""
   }
 
-  private def jobRow(jobs: DataFrame, id: String): Option[Row] =
-    jobs.filter(col("jobId") === lit(id)).limit(1).collect().headOption
+  /** False-positive rate of [[JobsSnapshot]]'s id filter: a false
+    * positive costs the one-task scan every miss cost without a filter. */
+  private val IdFilterFpp = 0.01
+
+  /** Two aggregates over the bound jobs frame: the row count of each
+    * exact `status`, folded to lower case here (a null status keeps its
+    * own null group), so `counts` equals `groupBy(lower(status))`; and a
+    * Bloom filter over a string `jobId` column. `mayHold(id)` false
+    * means no row has that id; true means the caller must scan. */
+  private final class JobsSnapshot(jobs: DataFrame) {
+    val counts: Map[String, Long] = jobs.groupBy(col("status")).count()
+      .collect()
+      .groupMapReduce(r => Option(r.getString(0))
+        .map(_.toLowerCase(java.util.Locale.ROOT)).orNull)(_.getLong(1))(_ + _)
+    private val total = counts.valuesIterator.sum
+    // null ids are skipped by the filter, as `jobId === id` never
+    // matches them; a non-string jobId column gets no filter (a string
+    // id compares to it through a cast, which the filter cannot mirror)
+    private val ids =
+      if (total == 0 || !jobs.schema.fields.exists(f =>
+          f.name == "jobId" && f.dataType == StringType)) None
+      else Some(jobs.stat.bloomFilter("jobId", total, IdFilterFpp))
+    def mayHold(id: String): Boolean =
+      total > 0 && ids.forall(_.mightContainString(id))
+  }
 
   private def tsMs(row: Row, field: String): Option[Long] =
     opt(row, field).collect { case t: java.sql.Timestamp => t.getTime }
@@ -599,7 +638,7 @@ object HttpApi {
     (for (s <- started; e <- ended) yield math.max(0L, e - s)).getOrElse(0L)
   }
 
-  private def jobStatusJson(row: Row, nowEpoch: Long): String = {
+  private[api] def jobStatusJson(row: Row, nowEpoch: Long): String = {
     def s(f: String) = opt(row, f).map(_.toString).getOrElse("")
     def n(f: String) = opt(row, f).map(_.toString).getOrElse("0")
     val err = opt(row, "errorMessage").map(_.toString)
@@ -616,7 +655,7 @@ object HttpApi {
   }
 
   /** processingRate/successRate math per src/request_handler.cpp:984-1001. */
-  private def jobMetricsJson(row: Row, nowEpoch: Long): String = {
+  private[api] def jobMetricsJson(row: Row, nowEpoch: Long): String = {
     def s(f: String) = opt(row, f).map(_.toString).getOrElse("")
     def l(f: String) = opt(row, f).collect { case x: Long => x }.getOrElse(0L)
     val ms = execMs(row, nowEpoch)
@@ -636,14 +675,14 @@ object HttpApi {
   /** Status document for a job that exists only in the scheduled buffer
     * (POST-created, no ETL run yet) — same shape as [[jobStatusJson]]
     * with the not-yet-started fields zeroed. */
-  private def scheduledStatusJson(id: String, status: String,
+  private[api] def scheduledStatusJson(id: String, status: String,
       jobType: String): String =
     s"""{"jobId":${quote(id)},"type":${quote(jobType)},""" +
       s""""status":${quote(status)},"createdAt":"","startedAt":"",""" +
       s""""completedAt":"","recordsProcessed":0,"recordsSuccessful":0,""" +
       s""""recordsFailed":0,"executionTimeMs":0}"""
 
-  private def scheduledMetricsJson(id: String, status: String): String =
+  private[api] def scheduledMetricsJson(id: String, status: String): String =
     s"""{"jobId":${quote(id)},"recordsProcessed":0,""" +
       s""""recordsSuccessful":0,"recordsFailed":0,""" +
       s""""processingRate":0.0,"successRate":0.0,""" +

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 import graft.core.Materialize
 import graft.functions.TextFunctions._
@@ -1086,9 +1088,11 @@ object Dedup {
   }
 
   /** The distributed rounds of [[connectedComponentsWithRounds]] over
-    * the symmetric `edges`, each round's labels made by `materialize`. */
-  private def propagate(nodes: DataFrame, idCol: String, edges: DataFrame,
-      maxIter: Int, materialize: (DataFrame, Int) => DataFrame)
+    * the symmetric `edges`, each round's labels made by `materialize`,
+    * which must compute the round's rows (an eager cut or checkpoint). */
+  private[operators] def propagate(nodes: DataFrame, idCol: String,
+      edges: DataFrame, maxIter: Int,
+      materialize: (DataFrame, Int) => DataFrame)
       : (DataFrame, Int) = {
     // symmetric edges ⇒ the src column alone covers every endpoint
     var labels = materialize(edges.select(col("src").as("id")).distinct()
@@ -1110,12 +1114,10 @@ object Dedup {
       // job. Task retries can only OVER-count (rows recompute, the
       // accumulator only grows), and the test is zero-vs-nonzero: a
       // round with any change has acc ≥ 1 under any retry schedule, a
-      // converged round has exactly 0 (no row sets the flag).
-      val chgAcc = sc.longAccumulator(s"cc-changed-round-${iter + 1}")
-      val tally = udf { (chg: Boolean) =>
-        if (chg) chgAcc.add(1L)
-        chg
-      }.asNondeterministic()
+      // converged round has exactly 0 (no row sets the flag). The udf
+      // also counts the rows it saw, so a round that `materialize` did
+      // not compute cannot pass for a converged one.
+      val (chgAcc, rowAcc, tally) = roundTally(sc, s"cc-round-${iter + 1}")
       val next = materialize(
         labels.join(candidates, Seq("id"), "left")
           .select(col("id"),
@@ -1126,6 +1128,8 @@ object Dedup {
         iter + 1)
       frontier = next.filter(col("chg")).select(col("id"), col("comp"))
       converged = chgAcc.value == 0
+      if (converged)
+        requireComputed(rowAcc, next, s"connectedComponents round ${iter + 1}")
       labels = next.select(col("id"), col("comp"))
       iter += 1
     }
@@ -1141,6 +1145,32 @@ object Dedup {
       .agg(min(col("id")).as("comp"))
     (nodeLabels.join(canon, Seq("raw_comp")).select(col("id"), col("comp")), iter)
   }
+
+  /** A convergence tally for one CC round: an accumulator of changed
+    * rows, one of evaluated rows, and the udf that passes a row's change
+    * flag through while adding to both. */
+  private def roundTally(sc: org.apache.spark.SparkContext, name: String)
+      : (LongAccumulator, LongAccumulator, UserDefinedFunction) = {
+    val changed = sc.longAccumulator(s"$name-changed")
+    val rows = sc.longAccumulator(s"$name-rows")
+    val tally = udf { (chg: Boolean) =>
+      rows.add(1L)
+      if (chg) changed.add(1L)
+      chg
+    }.asNondeterministic()
+    (changed, rows, tally)
+  }
+
+  /** Throws unless the round's tally saw rows or the round has none
+    * (an empty graph, checked by one `isEmpty` job only then): a round
+    * its materialization left uncomputed has a change count of 0 that
+    * says nothing, and converging on it would return stale labels. */
+  private def requireComputed(rows: LongAccumulator, next: DataFrame,
+      round: String): Unit =
+    if (rows.value == 0 && !next.isEmpty)
+      throw new IllegalStateException(s"$round evaluated no rows: its " +
+        "materialization did not compute the round, so its change count " +
+        "cannot decide convergence")
 
   /** The driver-local finish of [[connectedComponentsWithRounds]]: None
     * when the ids are not Long/Int or `edges` (symmetric src/dst) has
@@ -1247,6 +1277,13 @@ object Dedup {
   def connectedComponentsDoublingWithRounds(nodes: DataFrame,
       pairs: DataFrame, idCol: String = "id", aCol: String = "id_a",
       bCol: String = "id_b", maxIter: Int = 32): (DataFrame, Int) =
+    doublingRounds(nodes, pairs, idCol, aCol, bCol, maxIter, Materialize.cut)
+
+  /** [[connectedComponentsDoublingWithRounds]] with each round's labels
+    * made by `cut`, which must compute the round's rows. */
+  private[operators] def doublingRounds(nodes: DataFrame, pairs: DataFrame,
+      idCol: String, aCol: String, bCol: String, maxIter: Int,
+      cut: DataFrame => DataFrame): (DataFrame, Int) =
       Materialize.scope { s =>
     val edges = s.keep(pairs
       .select(explode(array(
@@ -1254,7 +1291,7 @@ object Dedup {
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct())
-    var labels = Materialize.cut(edges.select(col("src").as("id")).distinct()
+    var labels = cut(edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id")))
     var converged = false
     var iter = 0
@@ -1278,20 +1315,18 @@ object Dedup {
       // decrease — replacing the labels⋈labels convergence join + count
       // job that previously shuffled both full label tables once per
       // round. The accumulator tallies during the eager checkpoint (the
-      // propagation-form contract: retries only over-count, and the
-      // test is zero-vs-nonzero).
-      val chgAcc = sc.longAccumulator(s"ccd-changed-round-${iter + 1}")
-      val tally = udf { (chg: Boolean) =>
-        if (chg) chgAcc.add(1L)
-        chg
-      }.asNondeterministic()
-      val next = Materialize.cut(labels.withColumn("own", lit(true))
+      // propagation-form contract: retries only over-count, the test is
+      // zero-vs-nonzero, and a round the cut did not compute throws).
+      val (chgAcc, rowAcc, tally) = roundTally(sc, s"ccd-round-${iter + 1}")
+      val next = cut(labels.withColumn("own", lit(true))
         .unionByName(viaEdge).unionByName(jumped)
         .groupBy(col("id")).agg(min(col("comp")).as("comp"),
           min(when(col("own"), col("comp"))).as("_old"))
         .select(col("id"), col("comp"),
           tally(coalesce(col("comp") < col("_old"), lit(false))).as("chg")))
       converged = chgAcc.value == 0
+      if (converged) requireComputed(rowAcc, next,
+        s"connectedComponentsDoubling round ${iter + 1}")
       labels = next.select(col("id"), col("comp"))
       iter += 1
     }

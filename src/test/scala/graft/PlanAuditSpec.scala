@@ -64,6 +64,38 @@ class PlanAuditSpec extends AnyFunSuite {
       children.flatMap(collectAll(_)(pf))
   }
 
+  /** The fleet rule for one-reducer funnels. An `Exchange
+    * SinglePartition` may sit only directly above a partial aggregate
+    * with no grouping keys, which sends one row per input partition;
+    * any other (a window, sort, limit or join over the whole input, a
+    * `repartition(1)`) sends its whole input through one task. Walks
+    * the plan with its cached frames' plans and subqueries; returns the
+    * child node name of each exchange that breaks the rule. */
+  private def funnels(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, PartialMerge}
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    def walk(p: QueryPlan[_]): Seq[QueryPlan[_]] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case qs: QueryStageExec => Seq(qs.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => (p.children ++ p.innerChildren).collect { case q: QueryPlan[_] => q }
+    }).flatMap(walk)
+    def onePerPartition(p: org.apache.spark.sql.execution.SparkPlan) = p match {
+      case a: BaseAggregateExec => a.groupingExpressions.isEmpty &&
+        a.aggregateExpressions.forall(e => e.mode == Partial || e.mode == PartialMerge)
+      case _ => false
+    }
+    walk(plan).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition &&
+          !onePerPartition(e.child) => e.child.nodeName
+    }
+  }
+
   private def pushed(plan: String): String =
     "PushedFilters: \\[[^\\]]*\\]".r.findAllIn(plan).mkString("; ")
 
@@ -325,45 +357,71 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("fleet invariant: no query plans a SinglePartition exchange outside the whitelist") {
     // Exchange SinglePartition is the one-reducer funnel that breaks at
-    // 100 TB: EVERY registered query's physical plan is scanned for it.
-    // A new query that sneaks in an unpartitioned window or a
-    // single-partition aggregation fails here by name, not in the
-    // cluster bill. (CollectLimit/TakeOrdered are fine and distinct.)
-    // The scan reads the physical plan's tree string, which prints
-    // "Exchange SinglePartition" and the plans of cached frames; the
-    // formatted explain puts "SinglePartition" on the node's Arguments
-    // line instead, where this search cannot see it.
+    // 100 TB: EVERY registered query's physical plan (its cached frames'
+    // plans and subqueries included) is checked with `funnels`, which
+    // allows the exchange only above a keyless partial aggregate. A new
+    // query that sneaks in an unpartitioned window or a single-partition
+    // sort fails here by name, not in the cluster bill. (A CollectLimit or
+    // TakeOrdered at the root plans no exchange and is fine.)
     // The same pass audits the materialization lifecycle: a build that
     // leaves a CacheManager entry behind leaks it for the application's
     // lifetime (nothing but a clearCache ever frees it). Each build
     // starts from an empty cache: a persist of a plan some earlier build
     // already leaked adds no entry, and would hide the second leak.
-    // Known offenders, listed for review in ROADMAP direction 4; each
-    // leaves the list once it is fixed or justified.
-    val whitelist: Set[String] = Set("q07_agg_time_range",
-      "q09_minmax_bench", "q182_nb_train", "q19_transform_rules",
-      "q212_cms_join_estimate", "q63_watermark_windows",
-      "q79_training_order", "q81_quality_funnel", "q98_key_skew")
+    // Queries that break the rule, each with the node under each of its
+    // funnels and why; ROADMAP direction 4 tracks them, and each leaves
+    // the whitelist once it is fixed. A funnel added, removed or moved
+    // onto a different node fails.
+    val whitelist: Map[String, (Seq[String], String)] = Map(
+      "q19_transform_rules" -> (Seq("LocalLimit"),
+        "ORDER BY doc_id LIMIT 500 under projections: <= 500 rows per partition"),
+      "q63_watermark_windows" -> (Seq("HashAggregate"),
+        "unpartitioned running max over per-batch maxima: one row per 50 events, a real funnel"),
+      "q79_training_order" -> (Seq("HashAggregate"),
+        "md5-prefix bucket counts for the global offsets: <= 256 rows"),
+      "q81_quality_funnel" -> (Seq("Project"),
+        "per-stage drop counts joined to the stage list: <= 5 rows"))
     def entries = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
     val audited = SparkEntry.queries.keys.toSeq.sorted.map { name =>
       spark.sharedState.cacheManager.clearCache()
       val before = entries
-      val plan =
-        try SparkEntry.queries(name)(spark, dir).queryExecution
-          .executedPlan.toString
+      val found =
+        try funnels(SparkEntry.queries(name)(spark, dir).queryExecution
+          .executedPlan)
         catch { case scala.util.control.NonFatal(e) =>
           fail(s"$name failed to plan: ${e.getMessage}")
         }
-      (name, plan.contains("Exchange SinglePartition"), entries - before)
+      (name, found, entries - before)
     }
-    val offenders = audited.collect { case (name, true, _) => name }
-    assert(offenders.toSet.subsetOf(whitelist),
-      s"SinglePartition exchanges outside whitelist: " +
-        s"${offenders.filterNot(whitelist)}")
+    val wrong = audited.collect {
+      case (name, found, _) if found != whitelist.get(name).fold(Seq.empty[String])(_._1) =>
+        s"$name: found ${found.mkString("[", ", ", "]")}, whitelisted " +
+          whitelist.get(name).fold("[]")(_._1.mkString("[", ", ", "]"))
+    }
+    assert(wrong.isEmpty,
+      s"SinglePartition funnels differ from the whitelist: ${wrong.mkString("; ")}")
     val leaks = audited.collect { case (name, _, n) if n > 0 => s"$name (+$n)" }
     assert(leaks.isEmpty,
       s"${leaks.size} query builds left CacheManager entries: " +
         leaks.mkString(", "))
+  }
+
+  test("funnel rule: a keyless global aggregate passes; a whole-input window fails, in a cached frame too") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val input = spark.range(0, 10000, 1, 4).toDF("x")
+    def plan(df: DataFrame) = df.queryExecution.executedPlan
+    assert(funnels(plan(input.agg(count(lit(1)), max(col("x")),
+      countDistinct(col("x"))))).isEmpty)
+    // a grouped aggregate shuffles by key, never to one partition
+    assert(funnels(plan(input.groupBy(col("x") % 7).count())).isEmpty)
+    val windowed = input.withColumn("r", row_number().over(Window.orderBy(col("x"))))
+    assert(funnels(plan(windowed)).nonEmpty)
+    assert(funnels(plan(input.repartition(1))).nonEmpty)
+    // the walk reads the plans of the frames a query reads from cache
+    val cached = graft.core.Materialize.detached(windowed)
+    try assert(funnels(plan(cached.filter(col("r") > 5))).nonEmpty)
+    finally graft.core.Materialize.release(cached)
   }
 
   test("q178/q179: theta pairwise stages consume k-row-bounded frames") {
