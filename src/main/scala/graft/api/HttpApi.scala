@@ -75,8 +75,12 @@ object HttpApi {
     * a local `Seq(...).toDF` frame never changes, so both meet this; to
     * serve newer data, bind a new frame. The filtered routes (monitor
     * jobs, log search, job hits) plan per request with the caller's
-    * filters pushed down. The job-status counts (monitor and health
-    * metrics) and a Bloom filter over the job ids are read once per
+    * filters pushed down; requests that differ only in their values
+    * reuse one generated class when `spark` was built by
+    * [[graft.core.GraftSession.builder]], which hoists primitive
+    * literals out of the generated code. The job-status counts (monitor
+    * and health metrics, the health root's active jobs) and a Bloom
+    * filter over the job ids are read once per
     * bind, on first use, and shared by every request after it: an id
     * the filter rules out answers from the scheduled-job buffer or 404
     * without a Spark job. `users` (user_id,
@@ -219,7 +223,8 @@ object HttpApi {
         s"""{"running":true,"connections":${filters.get().size}}"""
       path.stripPrefix("/api/health") match {
         case "" =>
-          (200, QueryApi.health(spark, Some(jobs)).toJSON.collect().head)
+          // a local row rendered on the driver: no Spark job
+          (200, QueryApi.health(spark, snapshot.active).collect().head.json)
         case "/status" =>
           (200, s"""{"status":"${if (alive) "healthy" else "degraded"}",""" +
             s""""timestamp":"$now","version":"1.0.0",""" +
@@ -605,10 +610,13 @@ object HttpApi {
     * Bloom filter over a string `jobId` column. `mayHold(id)` false
     * means no row has that id; true means the caller must scan. */
   private final class JobsSnapshot(jobs: DataFrame) {
-    val counts: Map[String, Long] = jobs.groupBy(col("status")).count()
-      .collect()
-      .groupMapReduce(r => Option(r.getString(0))
-        .map(_.toLowerCase(java.util.Locale.ROOT)).orNull)(_.getLong(1))(_ + _)
+    private val exact: Map[String, Long] = jobs.groupBy(col("status")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val counts: Map[String, Long] = exact.groupMapReduce { case (s, _) =>
+      Option(s).map(_.toLowerCase(java.util.Locale.ROOT)).orNull }(_._2)(_ + _)
+    /** Rows whose status is exactly one of `JobStatus.Active`, as
+      * [[QueryApi.health]] counts them. */
+    val active: Long = graft.model.JobStatus.Active.map(exact.getOrElse(_, 0L)).sum
     private val total = counts.valuesIterator.sum
     // null ids are skipped by the filter, as `jobId === id` never
     // matches them; a non-string jobId column gets no filter (a string

@@ -119,12 +119,17 @@ object QueryApi {
   def health(spark: org.apache.spark.sql.SparkSession,
       jobs: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.functions._
+    health(spark, jobs.map(j =>
+      j.filter(col("status").isin(graft.model.JobStatus.Active: _*)).count())
+      .getOrElse(0L))
+  }
+
+  /** The health row with its active-job count already known; a local
+    * frame, so collecting it starts no Spark job. */
+  def health(spark: org.apache.spark.sql.SparkSession, activeJobs: Long): DataFrame = {
     val rt = Runtime.getRuntime
     val usedMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
     val maxMb = rt.maxMemory() / (1024 * 1024)
-    val activeJobs = jobs.map(j =>
-      j.filter(col("status").isin(graft.model.JobStatus.Active: _*)).count())
-      .getOrElse(0L)
     import spark.implicits._
     Seq((true, true, usedMb, maxMb, usedMb.toDouble / maxMb * 100.0,
       rt.availableProcessors(), activeJobs,

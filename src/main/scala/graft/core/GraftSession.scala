@@ -19,6 +19,10 @@ import org.apache.spark.sql.SparkSession
   *     always wrong for someone.
   *   - shuffle.partitions defaults to the local core count; on a cluster
   *     this would be ~2-3x total executor cores (AQE coalesces down).
+  *   - [[org.apache.spark.sql.graftbridge.HoistLiterals]] installed as a
+  *     session extension: plans that differ only in primitive literal
+  *     values (a REST request's time window, the folded clock) share one
+  *     generated class; [[tune]] cannot add it to a built session.
   */
 object GraftSession {
 
@@ -78,6 +82,8 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions",
+        classOf[org.apache.spark.sql.graftbridge.HoistLiterals].getName)
 
   def get(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()

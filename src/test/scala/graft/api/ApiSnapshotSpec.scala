@@ -177,6 +177,26 @@ class ApiSnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("the health root answers its active-job count from the snapshot") {
+    val jobs = spark.read.parquet(jobsPath)
+    // exact status, as QueryApi.health counts: PENDING and RUNNING, not "running"
+    val active = jobs.filter(col("status").isin(graft.model.JobStatus.Active: _*)).count()
+    assert(active == 571)
+    // the gauges that move between two reads
+    def steady(body: String) = body.replaceAll("\"memory_(used_mb|pct)\":[^,]*", "")
+    val want = steady(QueryApi.health(spark, Some(jobs)).toJSON.collect().head)
+    withServer(jobs) { (get, _) =>
+      assert(get("/api/health")._1 == 200)
+      val started = org.apache.spark.sql.graftbridge.JobProbe.jobsStarted(spark) {
+        (1 to 5).foreach { _ =>
+          val (code, body) = get("/api/health")
+          assert(code == 200 && steady(body) == want, body)
+        }
+      }
+      assert(started == 0, s"$started Spark jobs for 5 health reads")
+    }
+  }
+
   test("a parquet file appended to the bound directory changes no answer") {
     val path = parquetJobs("fresh", rows(0, 1000))
     val bound = spark.read.parquet(path)
